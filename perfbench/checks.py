@@ -1,7 +1,5 @@
-"""Output checks made apart from the engine.
+"""Output checks of ``tick_stream``, made apart from the engine.
 
-- ``frame_digest``: an order-insensitive value hash of a result table, used
-  to compare a query's Spark output with its DuckDB oracle.
 - ``replay_ticks`` / ``expected_ledger_keys`` / ``rmse_by_merge_asof``: a
   pandas replay of the tick pipeline (change-dedup, anchored variation,
   forecast cadence, as-of scoring) over the generated polls.
@@ -11,34 +9,8 @@
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
 import pandas as pd
-
-
-def _normalise(col: pd.Series) -> pd.Series:
-    """One comparable dtype per kind of column: numbers (nullable or not,
-    integer or float) as float64 with -0.0 folded into 0.0, times as
-    datetime64[ns], everything else as strings."""
-    if pd.api.types.is_bool_dtype(col) or pd.api.types.is_numeric_dtype(col):
-        return pd.to_numeric(col, errors="raise").astype("float64") + 0.0
-    if pd.api.types.is_datetime64_any_dtype(col):
-        return col.astype("datetime64[ns]")
-    return col.astype(object).where(col.notna(), None).astype(str)
-
-
-def frame_digest(df: pd.DataFrame) -> tuple[int, str]:
-    """(row count, sha256) of a result table, independent of row order:
-    sorted column names, then the rows sorted by every column and hashed."""
-    cols = sorted(df.columns)
-    norm = pd.DataFrame({c: _normalise(df[c]) for c in cols}).sort_values(cols, ignore_index=True)
-    h = hashlib.sha256("\x1f".join(cols).encode())
-    h.update(pd.util.hash_pandas_object(norm, index=False).to_numpy().tobytes())
-    return len(norm), h.hexdigest()
-
-
-# -- tick pipeline replay -----------------------------------------------------
 
 
 def replay_ticks(polls: pd.DataFrame) -> pd.DataFrame:

@@ -1,19 +1,38 @@
-"""Fixed sf0.1 star schema + events table for the query mixes.
+"""sf0.1 star schema + events table for ``relational_mix``.
 
-The tables follow the schemas in ``catalog.SCHEMAS`` and the row counts of
-the sf0.1 fixtures (FIXTURES.md): 600 k lineitem, 150 k orders, 15 k
-customers, 1 k suppliers, 100 k events over 1 500 users.  They are drawn
-from one fixed seed, written once per checkout and reused, like a TPC-H
-``dbgen`` database; the run's ``--seed`` permutes the query stream instead.
-Timestamps are written as parquet ``timestamp[us]`` without a zone, which is
-what ``catalog.load_table`` normalises.
+The benchmark writes its own tables because its run has only its checkout:
+the repository's sf0.1 fixtures (``catalog.default_sf_dir()``) are not part
+of it, and they have been regenerated between rounds (their timestamp
+columns changed physical type).  The tables follow the schemas in
+``catalog.SCHEMAS``, and every distribution below was read off the sf0.1
+fixtures with DuckDB (``python3 perfbench/fixtures.py`` prints both sets
+side by side, with each mix query's selectivity, output rows and time):
 
-Writing is atomic (a temp directory renamed into place), so an interrupted
-first run leaves no half-written table set behind.
+- every column is drawn on its own, uniformly, except as noted: the pairs
+  checked in the fixtures (quantity and price, an order's total and its
+  lines' sum, user and value) correlate below 0.01;
+- ``orders``: 150 k, ``o_orderdate`` one of the 2 405 days 1995-01-01 ..
+  2001-08-01, ``o_totalprice`` uniform 1 000 .. 500 000;
+- ``lineitem``: 600 k, ``l_orderkey`` uniform over the orders (so 1.8 %
+  of orders have none, as in the fixtures), ``l_shipdate`` one of the
+  2 499 days 1995-01-02 .. 2001-11-04 independent of the order date (48 %
+  of the lines ship before their order);
+- ``events``: 100 k over 1 500 uniform users, strictly increasing ``ts``
+  from 2024-01-01 with exponential gaps of mean 25.92 s (microseconds),
+  ``value`` exponential with mean 50 rounded to cents, so consecutive
+  values of a user almost never repeat (0.01 % in the fixtures).
+
+They are drawn from one fixed seed, written once per checkout and reused,
+like a TPC-H ``dbgen`` database; the run's ``--seed`` permutes the query
+stream instead.  Timestamps are written as parquet ``timestamp[us]``
+without a zone, as in the fixtures, which ``catalog.load_table``
+normalises.  Writing is atomic (a temp directory renamed into place), so
+an interrupted first run leaves no half-written table set behind.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
 import time
@@ -23,15 +42,22 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 TABLE_SEED = 20240101
-TABLES = ("region", "nation", "customer", "supplier", "orders", "lineitem", "events")
 
 _DAY_US = 86_400_000_000
-_EPOCH_1995 = np.datetime64("1995-01-01", "us").astype(np.int64)
-_EPOCH_2024 = np.datetime64("2024-01-01", "us").astype(np.int64)
+
+
+def _day(s: str) -> int:
+    return int(np.datetime64(s, "us").astype(np.int64))
 
 
 def _ts(us: np.ndarray) -> pa.Array:
     return pa.array(us.astype(np.int64), type=pa.timestamp("us"))
+
+
+def _days(rng, first: str, last: str, n: int) -> np.ndarray:
+    """``n`` whole days drawn uniformly from ``first`` .. ``last`` inclusive."""
+    span = (_day(last) - _day(first)) // _DAY_US + 1
+    return _day(first) + rng.integers(0, span, n) * _DAY_US
 
 
 def build_tables(seed: int = TABLE_SEED) -> dict[str, pa.Table]:
@@ -69,23 +95,21 @@ def build_tables(seed: int = TABLE_SEED) -> dict[str, pa.Table]:
             "s_acctbal": np.round(rng.uniform(-999.99, 9999.99, n_supp), 2),
         }
     )
-    o_date = _EPOCH_1995 + rng.integers(0, 2404, n_ord) * _DAY_US  # 1995-01-01 .. 2001-07
     orders = pa.table(
         {
             "o_orderkey": pa.array(np.arange(n_ord), pa.int64()),
             "o_custkey": pa.array(rng.integers(0, n_cust, n_ord), pa.int64()),
             "o_orderstatus": np.array(["F", "O", "P"])[rng.integers(0, 3, n_ord)],
             "o_totalprice": np.round(rng.uniform(1000.0, 500000.0, n_ord), 2),
-            "o_orderdate": _ts(o_date),
+            "o_orderdate": _ts(_days(rng, "1995-01-01", "2001-08-01", n_ord)),
             "o_orderpriority": np.array(
                 ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
             )[rng.integers(0, 5, n_ord)],
         }
     )
-    l_order = rng.integers(0, n_ord, n_li)
     lineitem = pa.table(
         {
-            "l_orderkey": pa.array(l_order, pa.int64()),
+            "l_orderkey": pa.array(rng.integers(0, n_ord, n_li), pa.int64()),
             "l_partkey": pa.array(rng.integers(0, 20_000, n_li), pa.int64()),
             "l_suppkey": pa.array(rng.integers(0, n_supp, n_li), pa.int64()),
             "l_linenumber": pa.array(rng.integers(1, 8, n_li), pa.int32()),
@@ -95,32 +119,21 @@ def build_tables(seed: int = TABLE_SEED) -> dict[str, pa.Table]:
             "l_tax": rng.integers(0, 9, n_li) / 100.0,
             "l_returnflag": np.array(["A", "N", "R"])[rng.integers(0, 3, n_li)],
             "l_linestatus": np.array(["F", "O"])[rng.integers(0, 2, n_li)],
-            # ships 1..121 days after its order, so Q21's 60-day lateness splits
-            "l_shipdate": _ts(o_date[l_order] + rng.integers(1, 122, n_li) * _DAY_US),
+            "l_shipdate": _ts(_days(rng, "1995-01-02", "2001-11-04", n_li)),
         }
     )
-    # Strictly increasing event times (distinct per user, so as-of and
-    # lag/lead orders have no ties); values revisit levels so the
-    # change-dedup gate drops rows.
-    gaps = rng.integers(1, 50_000_000, n_ev)
-    users = rng.integers(0, n_users, n_ev)
-    level = np.round(0.5 + rng.exponential(50.0, n_ev), 2)
-    repeat = rng.random(n_ev) < 0.3
-    value = level.copy()
-    order = np.lexsort((np.arange(n_ev), users))
-    for i in range(1, n_ev):  # carry the user's previous value on repeats
-        cur, prev = order[i], order[i - 1]
-        if repeat[cur] and users[cur] == users[prev]:
-            value[cur] = value[prev]
+    # Gaps of at least 1 us keep event times distinct, so as-of and
+    # lag/lead orders have no ties.
+    gaps = np.maximum(1, np.round(rng.exponential(25.92e6, n_ev))).astype(np.int64)
     events = pa.table(
         {
             "event_id": pa.array(np.arange(n_ev), pa.int64()),
-            "ts": _ts(_EPOCH_2024 + np.cumsum(gaps)),
-            "user_id": pa.array(users, pa.int64()),
+            "ts": _ts(_day("2024-01-01") + np.cumsum(gaps)),
+            "user_id": pa.array(rng.integers(0, n_users, n_ev), pa.int64()),
             "event_type": np.array(["click", "purchase", "error", "signup", "view"])[
                 rng.integers(0, 5, n_ev)
             ],
-            "value": value,
+            "value": np.round(rng.exponential(50.0, n_ev), 2),
             "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n_ev)],
         }
     )
@@ -133,6 +146,14 @@ def build_tables(seed: int = TABLE_SEED) -> dict[str, pa.Table]:
         "lineitem": lineitem,
         "events": events,
     }
+
+
+def data_dir(root: str) -> str:
+    """Where the table set lives under ``root``: named after a digest of this
+    file, so tables written by an earlier generator are never reused."""
+    with open(__file__, "rb") as f:
+        digest = hashlib.sha256(f.read()).hexdigest()[:12]
+    return os.path.join(root, ".data", f"sf0.1-{digest}")
 
 
 def ensure_tables(data_dir: str) -> float:
@@ -149,3 +170,7 @@ def ensure_tables(data_dir: str) -> float:
     os.rename(tmp, data_dir)
     return time.perf_counter() - t0
 
+
+def table_names(data_dir: str) -> list[str]:
+    """The tables written under ``data_dir``."""
+    return sorted(f[: -len(".parquet")] for f in os.listdir(data_dir) if f.endswith(".parquet"))
