@@ -22,9 +22,10 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     from real_time_scraping_and_predicting_time_series_data_spark.plans.flagship import flagship
 
-    # events.ts is parquet TIMESTAMP(NANOS); the driver may hand us a session
-    # without the nanosAsLong escape hatch, so set it here (runtime conf —
-    # takes effect for new reads).
+    # The driver tables store timestamps as parquet timestamp[us]; parquet
+    # written by pandas stores TIMESTAMP(NANOS), which Spark reads only with
+    # the nanosAsLong escape hatch. The driver may hand us a session without
+    # it, so set it here (runtime conf — takes effect for new reads).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return flagship(spark, "/root/testdata/sf0.001")
 

@@ -1,4 +1,5 @@
-"""Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
+"""Benchmark runner: every oracle-bearing registry query, in registry order,
+at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total_sec>, "unit": "sec",
@@ -23,311 +24,18 @@ from real_time_scraping_and_predicting_time_series_data_spark.session import (
     release_persisted_rdds,
 )
 
-# Representative of the engine's surface: the reference pipeline (flagship,
-# asof, windows), relational core (agg/join/window/topk), and the
-# LLM-pipeline extensions (dedup/similarity/text) as they land.
-HEADLINE = [
-    "flagship_top_movers",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "asof_join_click_purchase",
-    "asof_fifo_forecast_alignment",
-    "ts_sliding_features_lags",
-    "window_rank_orders_per_customer",
-    "agg_distinct_counts",
-    "sort_limit_global_topk",
-    "dedup_minhash_pairs",
-    "sim_bruteforce_topk",
-    "text_quality_scores",
-    "text_tfidf",
-    "ts_ewma",
-    "ts_resample_gapfill",
-    "q10_returned_items",
-    "dedup_jaccard_pairs",
-    "skew_salted_join",
-    "q6_revenue_forecast",
-    "q13_order_count_histogram",
-    "q21_waiting_supplier",
-    "range_join_purchase_errors",
-    "ts_hypertable_rollup",
-    "text_token_stats",
-    "funnel_three_stage",
-    "retention_cohorts",
-    "ts_anomaly_zscore",
-    "sketch_cms_heavy_hitters",
-    "sketch_hll_distinct",
-    "ts_gaps_islands",
-    "pipeline_clean_corpus",
-    # r2 additions: families most likely to regress under the blocking /
-    # recurrence rework, plus one more TPC-H deep shape.
-    "sim_ivf_topk",
-    "dedup_simhash_pairs",
-    "dedup_embedding_cosine",
-    "ts_cusum_drift",
-    "q8_market_share",
-    # r2 additions: corpus-construction family + nearest as-of + seasonal
-    # decomposition (new surface this round).
-    "corpus_vocabulary",
-    "corpus_token_entropy",
-    "corpus_pack_budget_bins",
-    "asof_join_nearest",
-    "ts_seasonal_decompose",
-    "corpus_source_mixture_fraction",
-    "ts_feature_matrix",
-    "ts_mad_outliers",
-    "ml_error_metrics",
-    "ml_quantile_binning",
-    # r3 additions: tick-bar analytics + corpus-quality packs, and the
-    # newly oracle-checked LSH family.
-    "ts_ohlc_vwap_bars",
-    "ts_max_drawdown",
-    "events_sessionize",
-    "corpus_chunk_overlap",
-    "corpus_lm_perplexity",
-    "embedding_int8_quantize",
-    "events_key_skew_profile",
-    "sim_lsh_topk",
-    "pipeline_pretraining_corpus",
-    # r4 additions: the oracle-checked IVF serving path + the new operator
-    # families most likely to regress (folds, HOF pipelines, iterative
-    # joins).
-    "sim_ivf_topk_seeded",
-    "ts_kalman_filter_1d",
-    "ts_changepoint_cusum_segments",
-    "text_winnow_fingerprint",
-    "graph_copurchase_pagerank",
-    "embedding_pq_codebook",
-    "sketch_bloom_membership",
-    "corpus_dedup_pipeline_report",
-    "dedup_char_ngram_jaccard",
-    "ts_sax_words",
-    "stats_ks_drift",
-    "ts_anomaly_stl_residual",
-    "events_top_paths",
-    "text_normalize_dedup_uplift",
-    "ts_lttb_downsample",
-    "ts_dtw_pairs",
-    # r4 second wave: compressed-domain ANN serving, graph structure
-    # mining, rank-based drift, robust trend.
-    "sim_pq_adc_topk",
-    "sim_ivfpq_topk",
-    "graph_triangle_counts",
-    "stats_mann_whitney",
-    "ts_theil_sen",
-    "dq_benford_totalprice",
-    "stats_chi_square_contingency",
-    "ml_forecast_intervals",
-    "dedup_containment_pairs",
-    "events_inter_arrival_stats",
-    "text_keywords_topk",
-    "funnel_conversion_lag",
-    "ml_point_in_time_features",
-    "events_markov_stationary",
-    "corpus_bigram_pmi",
-    "dq_schema_profile",
-    "orders_basket_lift",
-    "events_calendar_heatmap",
-    "ts_week_over_week",
-    "text_readability_scores",
-    # r5 additions: rank/resampling statistics, the Newton-step domain
-    # classifier, and cross-doc boilerplate detection.
-    "stats_spearman_corr",
-    "corpus_boilerplate_ngrams",
-    "ml_logistic_newton",
-    "stats_bootstrap_ci",
-    "events_value_quantiles_grid",
-    "ml_calibration_bins",
-    "ts_ewma_irregular",
-    "corpus_zipf_slope",
-    "corpus_temperature_mixture",
-    "graph_kcore_peel",
-    "stats_welch_ttest",
-    "text_ngram_novelty",
-    "udf_arrow_batch_map",
-    "ts_hampel_filter",
-    "stats_mutual_info",
-    "orders_rfm_segments",
-    "events_poisson_burst",
-    "ts_bollinger_bands",
-    "ts_rsi",
-    "ts_macd",
-    "dedup_jaccard_prefix_filter",
-    "stats_psi_drift",
-    "events_kaplan_meier",
-    "orders_revenue_concentration",
-    "dq_referential_integrity",
-    "corpus_classifier_filter",
-    "corpus_span_corruption",
-    "embedding_knn_probe",
-    # r5 wave 2: graph mining, hubness audit, relational Naive Bayes.
-    "graph_adamic_adar",
-    "graph_bfs_hops",
-    "embedding_hubness",
-    "ml_naive_bayes_text",
-    "stats_kendall_tau",
-    "stats_js_divergence",
-    "corpus_domain_cap",
-    "sim_mmr_select",
-    "embedding_centroid_drift",
-    "ts_cross_correlation",
-    "ts_granger_lag_f",
-    "ts_ljung_box",
-    "ts_periodogram",
-    "ts_var_es",
-    "ml_learning_curve",
-    "text_duplicate_spans",
-    "ts_forecast_reconciliation",
-    "dq_freshness_lag",
-    "stats_xi_correlation",
-    "ts_hurst_rs",
-    "events_session_likelihood",
-    "events_dau_wau_stickiness",
-    "orders_price_elasticity",
-    "ts_wavelet_energy",
-    "events_cohort_ltv",
-    "stats_hill_tail_index",
-    "orders_fulfillment_cycle",
-    "events_markov_attribution",
-    "sim_rrf_fusion",
-    "ml_conformal_forecast",
-    "graph_assortativity",
-    "orders_open_backlog",
-    "stats_runs_test",
-    "corpus_tokenizer_fertility",
-    "ml_naive_bayes_confusion",
-    "corpus_inspection_pack",
-    "orders_abc_classes",
-    "corpus_oov_rate",
-    "graph_rich_club",
-    "corpus_diversity_indices",
-    "graph_brand_modularity",
-    "stats_jarque_bera",
-    "ts_pacf",
-    # r7 additions: stationarity/regime diagnostics + the incremental
-    # df-index serve demo.
-    "ts_spectral_entropy",
-    "ts_permutation_entropy",
-    "ts_adf_unit_root",
-    "ts_turning_points",
-    "dedup_semantic_clusters",
-    "ts_seasonal_strength",
-    "corpus_bpe_first_merges",
-    "ml_kmeans_summary",
-    # r7 session waves: classifier-eval panel, group-comparison suite,
-    # schema-discovery profilers.
-    "ml_roc_auc",
-    "ml_pr_auc",
-    "ml_isotonic_calibration",
-    "stats_anova_oneway",
-    "stats_levene_brown_forsythe",
-    "stats_cramers_v",
-    "dq_inclusion_dependencies",
-    "dq_functional_dependencies",
-    "orders_frequent_triples",
-    "sql_lateral_topk",
-    "ml_roc_auc_stream_serve",
-    "dedup_cdc_chunks",
-    "corpus_bigram_llr",
-    "embedding_silhouette",
-    "stats_two_proportion_z",
-    "stats_fdr_bh",
-    "stats_permutation_test",
-    "dedup_fuzzy_orders",
-    "sketch_hll_md5",
-    "ml_harmonic_regression",
-    "graph_clustering_coefficient",
-    "ml_ks_separation",
-    "ml_cumulative_gains",
-    "stats_experiment_stream_serve",
-    "ts_croston_forecast",
-    "source_tick_batch",
-    "source_tick_stream_serve",
-    "udtf_word_chunks",
-    "ml_boosted_stumps",
-    "ts_theta_forecast",
-]
-# r8: the curated list above is the ORDER; coverage is by construction —
-# main() appends every oracle-bearing registry query not already listed
-# (alphabetical), so bench count == oracle count permanently (the r7
-# verdict found 114 oracle-bearing queries, mostly sub-second relational
-# shapes, absent from the headline set; a hand-maintained list drifts).
-
 # Per-query repetitions: single runs at ~1-second magnitudes smear with
 # environment noise (r3's uniform +9% drift); the median of N runs makes
 # real regressions stand out. First run of each query additionally absorbs
 # its plan compilation.
 RUNS = 3
-
-# r9 (re-derived from the r9 anchor bench_runs_r9.json): queries that get 5 runs instead of 3.  The intra-session environment
-# drift band (SCALE.md r7: 1.2-1.9x on untouched queries) is the dominant
-# error on every cross-round trend claim, and it is concentrated where
-# medians are large.  Selection rule, mechanical, from the r7 driver
-# samples in bench_runs_r8_1.json: top-20 by excess-spread impact
-# (spread-1)*median, plus every query with median >= 2.5 s, plus the r7
-# verdict's named movers.  Re-derive each round from the round-stamped
-# samples file.
-HIGH_VARIANCE = frozenset({
-    # r12 additions by the median >= 2.5 s rule (scoped r12 samples:
-    # bench_runs_r12_{3,4,5}.json): the auto-K relation serves stay in the
-    # set via their existing entries; these are the new multi-second rows.
-    "corpus_frontier_stream_serve",
-    "dedup_cross_cell_audit",
-    "sim_topk_relation_lloyd",
-    "sim_pq_relation_topk",
-    "sim_hard_negatives",
-    "corpus_boilerplate_ngrams",
-    "corpus_dedup_pipeline_report",
-    "corpus_df_index_serve",
-    "dedup_char_ngram_jaccard",
-    "dedup_clusters_star",
-    "dedup_clusters_stopgram",
-    "dedup_containment_pairs",
-    "dedup_duplicate_clusters",
-    "dedup_embedding_cosine",
-    "dedup_jaccard_pairs",
-    "dedup_jaccard_prefix_filter",
-    "dedup_minhash_pairs",
-    "dedup_semantic_drift_serve",
-    "dedup_simhash_pairs",
-    "embedding_knn_probe",
-    "embedding_pca_power",
-    "events_markov_attribution",
-    "flagship_top_movers",
-    "graph_assortativity",
-    "graph_bfs_hops",
-    "graph_brand_modularity",
-    "graph_clustering_coefficient",
-    "graph_copurchase_pagerank",
-    "graph_kcore_peel",
-    "graph_rich_club",
-    "ml_kmeans_summary",
-    "orders_frequent_triples",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "sim_bruteforce_topk",
-    "sim_ivf_binary_recall_audit",
-    "sim_ivf_binary_topk",
-    "sim_ivf_topk",
-    "sim_ivfpq_topk",
-    "sim_sq8_relation_topk",
-    "sim_topk_relation",
-    "source_tick_batch",
-    "source_tick_stream_serve",
-    "stats_bootstrap_ci",
-    "stats_spearman_corr",
-    "text_ngram_novelty",
-    "ts_dtw_pairs",
-    "ts_lttb_downsample",
-    "ts_resample_interpolate",
-    "udf_grouped_map_zscore",
-})
-RUNS_HV = 5
-
-# Round stamp for the durable samples copy (see SCALE.md audit-trail
-# correction: bench_runs_local.json is last-writer-wins scratch; the
-# round-stamped copy is the audit trail BASELINE.md points at).
-ROUND = 14
+# A query takes RUNS_MAX samples instead of RUNS when its warm samples
+# (every sample after the first, which also compiles the plan) spread
+# max/min by more than SPREAD_RATIO: that is where a median of three moves
+# most.  Judged on the first sample too, a spread or a "slow" threshold
+# fires on nearly every query (391 of 424 in bench_runs_r13.json).
+RUNS_MAX = 5
+SPREAD_RATIO = 1.3
 
 # Per-run sample artifacts live under bench_runs/ (ADVICE r10: 29 one-line
 # scratch files at the repo root cluttered the top level); only the
@@ -355,6 +63,16 @@ CAL_RATIO = 1.3
 CAL_MIN_DELTA = 0.3
 
 
+def bench_names(qs: dict) -> list[str]:
+    """The benched list: every oracle-bearing query, in registry order."""
+    return [n for n, q in qs.items() if q.oracle is not None]
+
+
+def _wants_more_samples(samples: list[float]) -> bool:
+    warm = samples[1:]
+    return max(warm) > SPREAD_RATIO * min(warm)
+
+
 def _run_once(qs, name: str, spark, sf_dir: str) -> float:
     t0 = time.perf_counter()
     qs[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -376,6 +94,7 @@ def _cal_flagged(median: float, ref: float) -> bool:
 
 
 def main() -> int:
+    started = time.strftime("%Y%m%dT%H%M%SZ", time.gmtime())
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
@@ -383,12 +102,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = all_queries()
-    names = [n for n in HEADLINE if n in qs]
-    # Coverage by construction: every oracle-bearing query is benched.
-    listed = set(names)
-    names += sorted(
-        n for n, q in qs.items() if q.oracle is not None and n not in listed
-    )
+    names = bench_names(qs)
     # Isolated re-measure mode (not used by the driver, which passes no
     # argv): `python bench.py name...` scopes the run to those queries —
     # the mechanism for BASELINE.md's "re-measure outliers in isolation".
@@ -461,7 +175,9 @@ def main() -> int:
             release_persisted_rdds(spark)
 
         samples = []
-        for _ in range(RUNS_HV if name in HIGH_VARIANCE else RUNS):
+        for i in range(RUNS_MAX):
+            if i == RUNS and not _wants_more_samples(samples):
+                break
             samples.append(_run_once(qs, name, spark, sf_dir))
             _unpersist_all()
         runs[name] = samples
@@ -492,14 +208,15 @@ def main() -> int:
     # ONE compact line: metric / value / per-query medians / sf.
     # r8: also emit each query's max/min spread so SCALE.md's "noise, not
     # regression" calls are mechanical (threshold in BASELINE.md), and copy
-    # the samples to a round-stamped file nothing overwrites.
+    # the samples to a start-time-stamped file nothing overwrites.
     spread = {
         n: round(max(v) / min(v), 3) if min(v) > 0 else None
         for n, v in runs.items()
     }
     payload = {
         "runs_per_query": RUNS,
-        "runs_high_variance": RUNS_HV,
+        "runs_max": RUNS_MAX,
+        "more_runs_rule": {"warm_spread_ratio": SPREAD_RATIO},
         "all_runs": runs,
         "spread": spread,
         "calibration": {
@@ -518,19 +235,20 @@ def main() -> int:
             json.dump(payload, f)
     except OSError:
         pass
-    # Round-stamped copies never clobber (r7 lesson: the driver's post-
-    # session run overwrote the builder's final samples, orphaning the
-    # number SCALE.md cites) — each run of a round gets the next suffix.
+    # Start-time-stamped copies never clobber (r7 lesson: the driver's
+    # post-session run overwrote the builder's final samples, orphaning the
+    # number SCALE.md cites) — a name already taken gets the next suffix.
     try:
         k = 0
         while True:
-            name = f"bench_runs_r{ROUND}.json" if k == 0 else f"bench_runs_r{ROUND}_{k}.json"
-            path = os.path.join(RUNS_DIR, name)
-            if not os.path.exists(path):
+            suffix = "" if k == 0 else f"_{k}"
+            path = os.path.join(RUNS_DIR, f"bench_runs_{started}{suffix}.json")
+            try:
+                with open(path, "x") as f:
+                    json.dump(payload, f)
                 break
-            k += 1
-        with open(path, "w") as f:
-            json.dump(payload, f)
+            except FileExistsError:
+                k += 1
     except OSError:
         pass
     # compact separators: the per-query map is ~160 entries now and the

@@ -162,9 +162,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Timestamp columns are normalized to plain UTC ``timestamp`` regardless of
     the parquet physical type the generator used:
 
-    - TIMESTAMP(NANOS) (early testdata): Spark reads it as a long only under
+    - TIMESTAMP(NANOS) (early testdata, and parquet written by pandas such
+      as the test fixtures): Spark reads it as a long only under
       ``spark.sql.legacy.parquet.nanosAsLong``; truncate ns → µs here.
-    - timestamp[us] without timezone (current testdata): Spark reads it as
+    - timestamp[us] without timezone (current driver tables): Spark reads it as
       TIMESTAMP_NTZ, which several chronon functions (``unix_micros`` etc.)
       reject; cast to ``timestamp``. The session timezone is pinned to UTC,
       so the wall-clock values — and every DuckDB-oracle hash — are

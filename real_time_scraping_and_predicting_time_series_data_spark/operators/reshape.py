@@ -137,12 +137,15 @@ def q_per_key_reservoir(spark, sf_dir):
     )
 
 
+STRATA_FRACTIONS = {"en": 0.5, "fr": 0.2, "de": 0.2, "es": 0.2, "zh": 0.2}
+
+
 @register("sample_stratified", oracle=None, tags=("sample", "stratified"))
 def q_stratified_sample(spark, sf_dir):
     """Seeded per-stratum sampling (rows-only; fraction accuracy
     pytest-asserted)."""
     docs = load_table(spark, sf_dir, "documents")
-    out = stratified_sample(docs, "lang", {"en": 0.5, "fr": 0.2, "de": 0.2, "es": 0.2, "zh": 0.2})
+    out = stratified_sample(docs, "lang", STRATA_FRACTIONS)
     return out.select("doc_id", "lang")
 
 

@@ -392,12 +392,14 @@ def _cell_means_exact(assigned: DataFrame, vec_col: str, dim: int) -> DataFrame:
     same centroid doubles), the `kmeans_lloyd_exact` device.  Emits
     (cell, c_vec, c_nvec) like `_cell_means`.  The rebuild stays a LAZY
     distributed relation (long→double division is the same IEEE op either
-    side of a collect) so `ivf_train`'s whole iteration chain still
-    executes as ONE job inside its final eager checkpoint — a
-    per-iteration model collect was measured ~1 s/iteration SLOWER here
-    (three sequential bounded jobs vs one linear chain; unlike
-    `kmeans_lloyd_exact`, whose pre-r13 baseline was the py4j-unrolled
-    per-component aggregate, this caller never paid that cost)."""
+    side of a collect): nothing is collected to the driver, and
+    `ivf_train`'s whole iteration chain executes inside its final eager
+    checkpoint.  That checkpoint is still several jobs, because AQE runs
+    each shuffle stage as its own job: 3 jobs for the seed means plus 4
+    per Lloyd iteration (sf0.01, k=4).  A per-iteration model collect was
+    measured ~1 s/iteration SLOWER here (unlike `kmeans_lloyd_exact`,
+    whose pre-r13 baseline was the py4j-unrolled per-component
+    aggregate, this caller never paid that cost)."""
     part = (
         assigned.select(
             "cell",
@@ -438,10 +440,9 @@ def ivf_train(
     ``avg`` — any partition order now gives bit-identical centroids, so
     `sim_ivf_topk` carries a full DuckDB value-hash oracle instead of the
     rows-only check (output verified identical to the fp-avg path at
-    sf0.001/0.01/0.1 before the swap).  The model-sized K×dim partials
-    collect to a LocalTableScan (the r13 `kmeans_lloyd_exact` device), so
-    the training chain is also cheaper: each iteration is one bounded
-    aggregate job instead of a growing lazy plan.
+    sf0.001/0.01/0.1 before the swap).  The iterations build one lazy
+    plan with no driver collect; the final ``localCheckpoint(eager=True)``
+    executes it (see `_cell_means_exact` for its job count).
     """
     if iters < 0:
         raise ValueError(f"iters must be >= 0, got {iters}")
@@ -925,8 +926,11 @@ def q_sim_ivf_seeded(spark, sf_dir):
 # grows N^1.5; restoring linearity at extreme N is the NEXT rung —
 # vectorized assignment (`ivf_assign_gemm`) or hierarchical coarse
 # quantization shrink `a` so the linear-K rule wins again (documented in
-# the serve docstrings; the GEMM path is not bit-safe against the fold,
-# so oracle-bearing serves stay on the fold arithmetic).
+# the serve docstrings).  The GEMM path is not bit-safe against the fold:
+# numpy sums dot products in another order, so a distance within ~1e-15
+# of a round-9 boundary can flip a cell.  `sim_topk_relation_gemm` still
+# carries the fold's full oracle with no band guard around that boundary;
+# the guard is an open item (ROADMAP item 4).
 _CELL_TARGET = 125
 _CELL_FLOOR = 4
 _CELL_SQRT_C = 0.4
@@ -2806,15 +2810,53 @@ def gram_partial(df: DataFrame, vec: str = "embedding", dim: int = _PCA_DIM) -> 
     merge by grouped sum) and the design absorbs that in the single
     serve-time round-6 on the total — the matmul is just another
     summation order, ~1e-12 relative from any other (parity re-verified
-    at sf0.001/0.01/0.1, plus the serve == batch suite)."""
+    at sf0.001/0.01/0.1, plus the serve == batch suite).
+
+    Every vector must be non-null with exactly ``dim`` non-null elements;
+    anything else raises ``ValueError`` naming the row's position in its
+    partition (a null element would otherwise turn the whole partial into
+    NaN, and ragged rows would be reshaped into wrong rows)."""
     import numpy as np  # noqa: PLC0415
     import pyarrow as pa  # noqa: PLC0415
 
+    def _first_null(arr) -> int:
+        return int(np.flatnonzero(arr.is_null().to_numpy(zero_copy_only=False))[0])
+
+    def _first_bad_row(col):
+        """(row, problem) for the earliest row whose vector is outside the
+        contract, or None."""
+        found = []
+        offsets = col.offsets.to_numpy()
+        lengths = np.diff(offsets)
+        if col.null_count:
+            nulls = col.is_null().to_numpy(zero_copy_only=False)
+            found.append((int(np.flatnonzero(nulls)[0]), "is a null vector"))
+            lengths[nulls] = dim
+        bad = np.flatnonzero(lengths != dim)
+        if bad.size:
+            found.append((int(bad[0]), f"has {lengths[bad[0]]} elements, expected {dim}"))
+        values = col.values.slice(offsets[0], offsets[-1] - offsets[0])
+        if values.null_count:
+            pos = _first_null(values)
+            row = int(np.searchsorted(offsets - offsets[0], pos, side="right")) - 1
+            found.append((row, "has a null element"))
+        return min(found, key=lambda f: f[0]) if found else None
+
     def _gram(batches):
+        from pyspark import TaskContext  # noqa: PLC0415
+
         acc = np.zeros((dim, dim), dtype=np.float64)
         saw = False
+        start = 0
         for batch in batches:
             col = batch.column(0)
+            bad = _first_bad_row(col)
+            if bad is not None:
+                raise ValueError(
+                    f"gram_partial: row {start + bad[0]} of partition "
+                    f"{TaskContext.get().partitionId()} {bad[1]}"
+                )
+            start += len(col)
             flat = col.flatten().to_numpy(zero_copy_only=False)
             if flat.size:
                 a = flat.reshape(-1, dim)
@@ -4618,9 +4660,12 @@ def ivf_topk_relation_gemm(
     same Catalyst shuffle-hash-on-cell + window plan as the fold path.
 
     Bit-safety: numpy reduces dots in a different order than the fold, so
-    a distance within ~1e-15 of a round-9 boundary can flip a cell — this
-    is the PERF serving path; oracle-bearing serves keep the fold.
-    Agreement with `ivf_topk_relation` at test scale is pinned by
+    a distance within ~1e-15 of a round-9 boundary can flip a cell.  The
+    registered `sim_topk_relation_gemm` nonetheless carries the fold's
+    full oracle, and nothing guards the boundary band: agreement rests on
+    no such distance occurring in the test data.  A band-guarded exact
+    re-fold is an open item (ROADMAP item 4).  Agreement with
+    `ivf_topk_relation` at test scale is pinned by
     tests/test_r13_operators.py."""
     c = corpus.select(F.col(id_col).alias("neighbor_id"), as_double(F.col(vec)).alias("v_c"))
     c = c.withColumn("_n", norm(F.col("v_c"))).select(
@@ -4677,8 +4722,10 @@ def q_sim_topk_relation_gemm(spark, sf_dir):
     oracle with the LINEAR auto-K substituted (see
     `_TOPK_RELATION_GEMM_ORACLE`) — per-row matmul dot products are
     batch-independent and agree with the DuckDB fold at the round-9
-    tiebreak/round-6 output boundaries (bit-agreement with
-    `sim_topk_relation` pinned by test; was rows-only through r13).
+    tiebreak/round-6 output boundaries at sf0.001/0.01/0.1 (bit-agreement
+    with `sim_topk_relation` pinned by test; was rows-only through r13).
+    No band guard protects a dot within ~1e-15 of a round-9 boundary —
+    see `ivf_topk_relation_gemm`.
     Uses the LINEAR auto-K rule — the point of vectorizing the probe
     term is that constant cell size (linear candidate volume) becomes
     affordable again past the fold ladder's √N cap; measured at sf1x in

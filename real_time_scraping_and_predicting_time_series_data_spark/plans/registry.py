@@ -43,15 +43,8 @@ QUERIES: dict[str, Query] = {}
 
 # Modules that contribute queries; imported lazily by all_queries() so a
 # syntax error in one operator module surfaces loudly instead of silently
-# shrinking the registry.
-# Module order determines registry dict order, which is the order the
-# driver's capped correctness harness walks: round 1 checked only the first
-# ~50 queries, leaving the as-of / dedup / similarity / text / multimodal /
-# UDF families without driver rows.  Rotate the not-yet-driver-checked
-# families to the front so this round's check window covers them; the
-# round-1-green relational/timeseries/flagship queries move to the tail
-# (their green rows are already on record, and the in-repo parity runner
-# keeps exercising every query regardless of order).
+# shrinking the registry.  all_queries() returns QUERIES in registration
+# order, which follows this import order.
 _QUERY_MODULES = (
     "real_time_scraping_and_predicting_time_series_data_spark.operators.asof",
     "real_time_scraping_and_predicting_time_series_data_spark.operators.dedup",
@@ -86,259 +79,6 @@ _QUERY_MODULES = (
 
 _loaded = False
 
-# Names pinned to the front of the registry iteration order regardless of
-# module order.  The driver's capped correctness harness walks the dict in
-# order and has checked ~50 queries per round (50 in r1, 47 in r2 — 99
-# distinct names so far); the in-repo parity runner covers ALL queries
-# every round regardless.  Front-load, in priority order: (a) this round's
-# new operators, (b) the four pipelines whose rows-only checks were
-# upgraded to full oracles this round (their recorded driver rows predate
-# the oracles), (c) signature/scale families with no driver row yet,
-# (d) the TPC-H deep shapes and remaining never-checked
-# rolling/reshape/stats/sampling queries.
-# (a) Queries with no driver CORRECTNESS row ever (r10's 50-query window
-# cut off exactly before the first 8; VERDICT r10 item 1 mandates they
-# lead the r11 window; all judge-parity green).  ml_lstm_fixed_inference
-# has an r9 row but its r10 oracle-text refresh was never sampled.
-_FRONT_NEVER_SAMPLED = (
-    "ml_learning_curve_ar",
-    "dedup_minhash_recall_audit",
-    "stats_cuped_adjustment",
-    "ts_matrix_profile",
-    "ts_mp_discords",
-    "dq_l_diversity",
-    "stats_kendall_tau_grid",
-    "stats_cohens_kappa",
-    "ml_lstm_fixed_inference",
-)
-
-# (b) ROUND 11 additions: new operators with no driver row yet, plus
-# rows-only queries upgraded to full oracles this round.  Appended as
-# each r11 wave lands.
-_FRONT_R11_NEW = (
-    # rows-only → full-oracle upgrades (VERDICT r10 item 3): the recorded
-    # driver rows predate the oracles.
-    "ml_linear_forecast_eval",
-    "ml_per_key_forecast_eval",
-    # new r11 operators
-    "corpus_url_canonical_dedup",
-    "sim_topk_relation_lloyd",
-    "stats_benjamini_hochberg",
-    "stats_ks_two_sample",
-    "stats_page_hinkley",
-    "ml_negative_binomial_mm",
-    "ml_huber_irls",
-    "orders_herfindahl",
-    "ml_yule_walker_ar2",
-    "sketch_count_min",
-    "sketch_cm_stream_serve",
-    "graph_k_core",
-    "corpus_crawl_frontier",
-    "dq_completeness_profile",
-)
-
-# (c) Evidence-freshness rotation: stalest green rows (newest driver
-# row = ROUND 1 for the first block, ROUND 2 for the rest).  Window
-# capacity left over after tiers (a)+(b) refreshes these oldest rows.
-_FRONT_STALE = (
-    "subquery_above_nation_avg",
-    "ts_anchored_variation",
-    "ts_anomaly_zscore",
-    "ts_change_dedup",
-    "ts_cusum_drift",
-    "ts_downsample",
-    "ts_forward_fill",
-    "ts_gaps_islands",
-    "ts_minmax_scale",
-    "ts_rmse",
-    "ts_running_extrema",
-    "ts_sliding_features_lags",
-    "ts_tail_window",
-    "ts_timestamp_arithmetic",
-    "ts_tumbling_agg",
-    "ts_winsorize",
-    "window_distribution_fns",
-    "window_lag_lead_price",
-    "window_rank_orders_per_customer",
-    "window_running_sum",
-    "asof_fifo_forecast_alignment",
-    "asof_join_click_purchase",
-    "asof_join_forward_tolerance",
-    "asof_join_nearest",
-    "cdc_scd2_history",
-    "cdc_upsert_snapshot",
-    "corpus_bigrams_topk",
-    "corpus_deterministic_shuffle",
-    "corpus_pii_redact",
-    "corpus_token_entropy",
-    "corpus_vocabulary",
-    "dedup_duplicate_clusters",
-    "dedup_exact_hash",
-    "dedup_exact_survivors",
-    "dedup_jaccard_pairs",
-    "events_markov_transitions",
-    "events_type_cooccurrence",
-    "funnel_three_stage",
-    "json_extract_props",
-    "json_from_json_struct",
-    "json_variant_extract",
-    "multimodal_frame_sample",
-    "multimodal_payload_stats",
-    "multimodal_text_embedding_join",
-    "pipeline_clean_corpus",
-    "retention_cohorts",
-    "sim_ivf_topk",
-    "sim_label_centroids",
-    "sketch_hll_distinct",
-    "text_decontaminate",
-    "text_edit_distance_pairs",
-    "text_fingerprint",
-    "text_langid",
-    "text_quality_scores",
-    "text_regex_extract",
-    "text_repetition_filter",
-    "text_tfidf",
-    "text_token_stats",
-    "text_token_topk",
-    "ts_sliding_features_arrays",
-    "udf_grouped_agg_pandas",
-    "udf_grouped_map_zscore",
-    "udf_scalar_pandas",
-)
-
-# (d) The 50 queries checked in ROUND 10 — the freshest evidence in
-# the ledger; kept in _FRONT only to pin their order at the tail
-# (module import order would otherwise scatter them forward).
-_FRONT_FRESH_R10 = (
-    "stats_wilcoxon_signed_rank",
-    "stats_friedman_test",
-    "events_logrank_test",
-    "ts_garch_volatility",
-    "graph_personalized_pagerank",
-    "graph_neighborhood_jaccard",
-    "ts_segmented_trend",
-    "stats_sprt_monitor",
-    "sim_nprobe_recall_curve",
-    "ml_elastic_net_cd",
-    "stats_sprt_stream_serve",
-    "ml_platt_scaling",
-    "sketch_kmv_distinct",
-    "events_weibull_fit",
-    "events_qini_uplift",
-    "events_markov_entropy_rate",
-    "ml_regression_influence",
-    "orders_price_index",
-    "stats_power_mde",
-    "dedup_lsh_tuning_curve",
-    "orders_bass_diffusion",
-    "ts_mann_kendall_trend",
-    "dq_reconciliation",
-    "ml_poisson_newton",
-    "sketch_kmv_stream_serve",
-    "sim_kcenter_seeds",
-    "stats_tail_dependence",
-    "events_dow_seasonality",
-    "stats_msprt_always_valid",
-    "stats_bayes_ab_probability",
-    "ts_gesd_outliers",
-    "ts_forecast_combination",
-    "ml_threshold_selection",
-    "multimodal_exact_payload_dedup",
-    "ts_anomaly_consensus",
-    "stats_kruskal_wallis",
-    "stats_anderson_darling",
-    "ml_brier_decomposition",
-    "dq_t_closeness",
-    "corpus_kneser_ney_bigram",
-    "graph_hits",
-    "sim_pq_relation_topk",
-    "corpus_bpe_train_merges",
-    "corpus_bpe_fertility",
-    "corpus_dsir_weights",
-    "corpus_dsir_stream_serve",
-    "dedup_substring_spans",
-    "dedup_substring_redact",
-    "stats_mcnemar_langid",
-    "ml_pinball_eval",
-)
-
-# (e) ROUND 13 window head (VERDICT r12 items 1-2): first the four r12
-# queries the driver has never sampled, then this round's new/retouched
-# queries (the multi-probe semantic store: a NEW serve, the drift serve
-# whose oracle was upgraded to replay multi-probe admission, and the
-# audit that motivated it).  Appended as each r13 wave lands.
-_FRONT_R13 = (
-    # never driver-sampled r12 queries (judge-parity green; need driver rows)
-    "corpus_html_extract",
-    "corpus_frontier_stream_serve",
-    "dedup_cross_cell_audit",
-    "pipeline_crawl_corpus",
-    # r13: multi-probe SemanticDedupStore
-    "dedup_semantic_multiprobe_serve",
-    "dedup_semantic_drift_serve",
-    # r13: robots.txt tier (new query; pipeline gained the n_robots_ok
-    # funnel column and the extraction moved to boundary-split blocks)
-    "corpus_robots_filter",
-    # r13: incremental AR(2) model store (M2 warm-start twin) under the
-    # same oracle as the batch refit
-    "ml_forecast_stream_serve",
-    # r13: GEMM serving rung (rows-only by design; hash-green twin =
-    # sim_topk_relation, bit-agreement test-pinned)
-    "sim_topk_relation_gemm",
-    # r13: sitemap discovery tier (crawl front door leg 3) + the composed
-    # discovery loop (sitemap -> robots -> schedule)
-    "corpus_sitemap_discovery",
-    "pipeline_discovery_frontier",
-)
-
-# r12's 50-query window covered _FRONT_NEVER_SAMPLED + _FRONT_R11_NEW and
-# the first 25 stale rows (through cdc_scd2_history) — split the stale tier
-# so the UNREFRESHED remainder leads this round's window right after the
-# r13 tier, and the freshly-checked r12 rows rotate behind.
-_R12_CHECKED_STALE = _FRONT_STALE[: _FRONT_STALE.index("cdc_upsert_snapshot")]
-_R13_PENDING_STALE = _FRONT_STALE[_FRONT_STALE.index("cdc_upsert_snapshot"):]
-
-# (f) ROUND 14 window head (VERDICT r13 item 2): the two queries whose
-# rows-only carve-outs were retired this round — their oracles are NEW
-# (gemm: the fold serve's oracle with linear auto-K; ivf: exact
-# quantized-mean Lloyd training), so the driver has no hash row for
-# either yet.
-_FRONT_R14 = (
-    "sim_ivf_topk",
-    "sim_topk_relation_gemm",
-)
-
-# r13's driver window covered exactly the r13 tier + the pending-stale
-# block (all 50 in CORRECTNESS_r13) — freshest evidence in the ledger,
-# rotate them BEHIND everything for r14.  The stalest refreshed evidence
-# is now the r10-checked block, so it leads the window after the r14
-# tier.
-_R13_CHECKED = tuple(n for n in (_FRONT_R13 + _R13_PENDING_STALE) if n not in _FRONT_R14)
-
-# Queries that are rows-only BY DESIGN (approximate/engine-specific by
-# definition: HLL register layouts, seeded sampling, sketch internals,
-# MLlib GBT internals — each maps to a hash-green exact twin elsewhere in
-# the registry and is property-tested in-repo).  The driver's ~50-query
-# window can verify nothing about them (`err: no_oracle`), so they sit at
-# the very BACK of the walk order: the window's budget goes to queries a
-# hash check can actually confirm.  The r13 rotation landing on three of
-# these cost 3 measured correctness points without any result changing
-# (VERDICT r13 correctness gate).
-_BACK_ROWS_ONLY = (
-    "sketch_hll_distinct",
-    "sample_stratified",
-    "ts_quantiles_approx",
-    "ml_gbt_forecast_eval",
-)
-
-_FRONT = (
-    _FRONT_R14
-    + _FRONT_FRESH_R10
-    + _FRONT_NEVER_SAMPLED
-    + _FRONT_R11_NEW
-    + _R12_CHECKED_STALE
-)
-
 
 def register(
     name: str, oracle: str | None = None, tags: tuple[str, ...] = (), doc: str = ""
@@ -360,15 +100,6 @@ def all_queries() -> dict[str, Query]:
         for mod in _QUERY_MODULES:
             importlib.import_module(mod)
         _loaded = True
-    back_names = (
-        tuple(n for n in _R13_CHECKED if n not in _BACK_ROWS_ONLY)
-        + _BACK_ROWS_ONLY
-    )
-    front = {n: QUERIES[n] for n in _FRONT if n in QUERIES}
-    back = {n: QUERIES[n] for n in back_names if n in QUERIES}
-    if front or back:
-        mid = {n: q for n, q in QUERIES.items() if n not in front and n not in back}
-        return {**front, **mid, **back}
     return QUERIES
 
 

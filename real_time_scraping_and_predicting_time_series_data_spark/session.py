@@ -78,9 +78,11 @@ def get_spark(
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # Driver testdata stores events.ts as parquet TIMESTAMP(NANOS), which
-        # Spark's vectorized reader rejects; read as long ns and convert in
-        # the catalog (catalog.load_table) to µs TimestampType.
+        # The driver tables store timestamps as parquet timestamp[us], but
+        # parquet written by pandas (the tier-1 test fixtures) stores
+        # TIMESTAMP(NANOS), which Spark's vectorized reader rejects; read
+        # that as long ns and convert in catalog.load_table to µs
+        # TimestampType.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # 128 MiB input splits: good balance of task count vs. overhead at
         # both local and cluster scale.

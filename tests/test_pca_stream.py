@@ -5,9 +5,13 @@ store must be replay-safe and compaction-invariant."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from real_time_scraping_and_predicting_time_series_data_spark.catalog import load_table
+from real_time_scraping_and_predicting_time_series_data_spark.operators.similarity import (
+    gram_partial,
+)
 from real_time_scraping_and_predicting_time_series_data_spark.plans.registry import (
     all_queries,
 )
@@ -63,3 +67,25 @@ def test_pca_stream_replay_and_compaction(spark, tmp_path):
     assert sorted(map(tuple, acc.serve_pca().collect())) == want
     acc.ingest_batch(part(1), 1)  # folded replay: dropped
     assert sorted(map(tuple, acc.serve_pca().collect())) == want
+
+
+@pytest.mark.parametrize(
+    "vectors, msg",
+    [
+        # a null element would turn the whole partial Gram into NaN
+        ([[1.0] * 8, [1.0] * 7 + [None]], "row 1 .* null element"),
+        # 7 + 9 elements flatten to 16 = 2 x 8 and would reshape silently
+        ([[1.0] * 7, [1.0] * 9], "row 0 .* 7 elements, expected 8"),
+        ([[1.0] * 8, None], "row 1 .* null vector"),
+        # two problem kinds in one batch: the earliest row is named
+        ([[1.0] * 7, [1.0] * 8, None], "row 0 .* 7 elements, expected 8"),
+        ([[1.0] * 7 + [None], [1.0] * 7, None], "row 0 .* null element"),
+        ([[1.0] * 8, [1.0] * 7, [None] * 8], "row 1 .* 7 elements, expected 8"),
+    ],
+)
+def test_gram_partial_rejects_null_and_ragged_vectors(spark, vectors, msg):
+    df = spark.createDataFrame(
+        [(v,) for v in vectors], "embedding array<double>"
+    ).coalesce(1)
+    with pytest.raises(Exception, match=msg):
+        gram_partial(df, dim=8).collect()

@@ -42,37 +42,24 @@ def test_query_parity_smoke(spark, oracle_con, name):
     assert res.ok, f"{name}: {res.detail}"
 
 
-def test_front_load_names_all_resolve():
-    """Every registry front-load name must name a REGISTERED query:
-    unknown names are skipped 'harmlessly' at serve time, which means a
-    typo would silently drop a query from the driver's correctness
-    window — exactly the evidence gap the front-load exists to close."""
+def test_all_queries_is_registration_order():
     from real_time_scraping_and_predicting_time_series_data_spark.plans.registry import (
-        _FRONT,
-        all_queries,
+        QUERIES as REGISTERED,
     )
 
-    qs = all_queries()
-    missing = [n for n in _FRONT if n not in qs]
-    assert missing == []
+    assert list(all_queries()) == list(REGISTERED)
 
 
 def test_bench_covers_every_oracle_bearing_query():
-    """bench.py's coverage-by-construction contract: the planned bench
-    list is HEADLINE plus every oracle-bearing registry query — so a new
+    """bench.py's coverage-by-construction contract: the bench list is
+    every oracle-bearing registry query, in registry order — so a new
     oracle-checked operator can never silently skip the benchmark."""
     import bench
 
-    from real_time_scraping_and_predicting_time_series_data_spark.plans.registry import (
-        all_queries,
-    )
+    from tests.test_registry_counts import EXPECTED_ORACLES
 
     qs = all_queries()
-    names = [n for n in bench.HEADLINE if n in qs]
-    listed = set(names)
-    names += sorted(
-        n for n, q in qs.items() if q.oracle is not None and n not in listed
-    )
-    oracle_bearing = {n for n, q in qs.items() if q.oracle is not None}
-    assert oracle_bearing <= set(names)
-    assert len(names) == len(set(names))
+    names = bench.bench_names(qs)
+    oracle_bearing = [n for n, q in qs.items() if q.oracle is not None]
+    assert names == oracle_bearing
+    assert len(names) == len(set(names)) == EXPECTED_ORACLES

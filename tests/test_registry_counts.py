@@ -30,17 +30,3 @@ def test_registry_counts_match_ledger():
     )
     assert set(osql) <= set(qs)
 
-
-def test_front_rotation_names_resolve():
-    """Every name pinned in the window-rotation tiers must exist in the
-    registry — a typo would silently drop the query from the driver's
-    check window instead of fronting it."""
-    from real_time_scraping_and_predicting_time_series_data_spark.plans.registry import (
-        _FRONT,
-        all_queries,
-    )
-
-    qs = all_queries()
-    missing = [n for n in _FRONT if n not in qs]
-    assert not missing, f"_FRONT names not in registry: {missing}"
-    assert len(set(_FRONT)) == len(_FRONT), "duplicate names in _FRONT tiers"

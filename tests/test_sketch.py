@@ -1,8 +1,12 @@
 """Count-min sketch guarantees: never undercount, bounded overcount, heavy
-hitters exact-ranked, and merge = build-on-union."""
+hitters exact-ranked, and merge = build-on-union; plus bounds checks for
+the registered approximate (rows-only) queries."""
 
 from __future__ import annotations
 
+import math
+
+import pytest
 from pyspark.sql import functions as F
 
 from real_time_scraping_and_predicting_time_series_data_spark.operators.sketch import (
@@ -88,6 +92,80 @@ def test_hll_distinct_within_rsd_of_exact(spark):
     for etype, est in approx.items():
         # rsd=1% → allow 5 standard-error widths before calling it broken
         assert abs(est - exact[etype]) <= max(1, 0.05 * exact[etype]), (etype, est, exact[etype])
+
+
+def _load(spark, table):
+    from real_time_scraping_and_predicting_time_series_data_spark.catalog import load_table
+
+    return load_table(spark, SF, table)
+
+
+def _check_sample_stratified(spark, rows):
+    from real_time_scraping_and_predicting_time_series_data_spark.operators.reshape import (
+        STRATA_FRACTIONS,
+    )
+
+    docs = {r["doc_id"]: r["lang"] for r in _load(spark, "documents").collect()}
+    ids = [r["doc_id"] for r in rows]
+    assert len(ids) == len(set(ids))
+    for r in rows:
+        assert docs.get(r["doc_id"]) == r["lang"], r
+    for lang in set(docs.values()):
+        n = sum(1 for v in docs.values() if v == lang)
+        f = STRATA_FRACTIONS.get(lang, 0.0)
+        got = sum(1 for r in rows if r["lang"] == lang)
+        # binomial count: within 4 standard deviations of n·f
+        assert abs(got - n * f) <= 4 * math.sqrt(n * f * (1 - f)), (lang, got, n, f)
+
+
+def _check_ts_quantiles_approx(spark, rows):
+    values: dict[int, list[float]] = {}
+    for r in _load(spark, "events").select("user_id", "value").collect():
+        values.setdefault(r["user_id"], []).append(r["value"])
+    assert {r["user_id"] for r in rows} == set(values)
+    for r in rows:
+        vs = values[r["user_id"]]
+        n, p = len(vs), r["p50_approx"]
+        assert p in vs, r
+        # accuracy 1000 bounds the rank error by n / 1000 (plus rounding)
+        err = n / 1000 + 1
+        below = sum(1 for v in vs if v < p)
+        at_or_below = sum(1 for v in vs if v <= p)
+        assert below + 1 <= 0.5 * n + err and at_or_below >= 0.5 * n - err, (r, n)
+        ndv = len(set(vs))
+        # approx_count_distinct's default rsd is 0.05: allow 4 standard errors
+        assert abs(r["ndv_approx"] - ndv) <= max(1, 4 * 0.05 * ndv), (r, ndv)
+
+
+def _check_ml_gbt_forecast_eval(spark, rows):
+    users = {r["user_id"] for r in _load(spark, "events").select("user_id").collect()}
+    assert rows
+    for r in rows:
+        assert r["user_id"] in users, r
+        assert math.isfinite(r["rmse_1"]) and r["rmse_1"] >= 0, r
+
+
+_BOUNDS = {
+    "sample_stratified": _check_sample_stratified,
+    "ts_quantiles_approx": _check_ts_quantiles_approx,
+    "ml_gbt_forecast_eval": _check_ml_gbt_forecast_eval,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_BOUNDS))
+def test_rows_only_query_within_bounds(spark, name):
+    """The registered rows-only queries have no oracle to hash against;
+    each is checked against its exact counterpart within a stated bound."""
+    from real_time_scraping_and_predicting_time_series_data_spark.plans.registry import all_queries
+
+    _BOUNDS[name](spark, all_queries()[name].fn(spark, SF).collect())
+
+
+def test_every_rows_only_query_has_a_bounds_test():
+    from real_time_scraping_and_predicting_time_series_data_spark.plans.registry import all_queries
+
+    rows_only = {n for n, q in all_queries().items() if q.oracle is None}
+    assert rows_only == set(_BOUNDS) | {"sketch_hll_distinct"}
 
 
 def test_cms_stream_merge_equals_batch(spark, tmp_path):
