@@ -121,7 +121,8 @@ def holt_linear(
     (level, trend) accumulator carried across Arrow batches in the
     iterator closure — O(1) state per key, Python entered once per
     partition. The streaming twin would carry (level, trend) in
-    ``transformWithStateInPandas`` state exactly like the stateful EWMA.
+    ``applyInPandasWithState`` state like the gates in
+    ``streaming/stateful.py``.
     """
     fields = [f for f in df.schema.fields]
     schema = StructType(

@@ -9,9 +9,9 @@ Why this shape scales: the centroid model is a K-row table fixed at index
 creation (trained/seeded offline — re-clustering a live index is a
 rebuild, not an ingest), so per-batch work is a ZERO-SHUFFLE broadcast
 projection (`ivf_assign`) plus one partitioned append; nothing ever
-re-reads history. The store is laid out ``batch_id=<id>/cell=<c>`` —
-replay-safe per batch (staging-rename, same contract as corpus_ingest)
-and cell-partitioned so a serve path that pins its probe set (a dashboard
+re-reads history. Each part (and the fold) is cell-partitioned under the
+shared store protocol (``store_compaction.py``: replay-safe per batch,
+plain-union fold) so a serve path that pins its probe set (a dashboard
 serving fixed queries) prunes to nprobe/K of the files before reading.
 
 Serving reuses `_probe_rank_preassigned` (operators/similarity.py) — the
@@ -19,24 +19,16 @@ exact probe/rank half of the batch `ivf_topk_seeded` path — so the
 streaming index's answers are BIT-IDENTICAL to the batch query over the
 same vectors (pinned by tests/test_ann_ingest.py, including an
 at-least-once replay).
-
-Deployment assumption (same as DriftStreamMonitor): the staging-rename is
-a DRIVER-LOCAL ``os.replace`` — correct only when ``store_dir`` is shared
-by driver and executors (local mode, NFS). On HDFS/S3, route the rename
-through the Hadoop ``FileSystem`` API or an atomic-commit table format.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vector import as_double, norm
 from ..operators.similarity import _probe_rank_preassigned, ivf_assign
-from .store_compaction import compacted_upto, is_compacted
+from .store_compaction import MicroBatchStore, PartStore
 
 __all__ = ["IvfStreamIndex", "seed_centroids"]
 
@@ -54,26 +46,24 @@ def seed_centroids(corpus: DataFrame, n_cells: int = 16, id_col: str = "vec_id",
     )
 
 
-class IvfStreamIndex:
+class IvfStreamIndex(MicroBatchStore):
     """Cell-partitioned incremental ANN index with a fixed coarse
     quantizer; ingest assigns, serve probes — history is never re-read."""
 
     def __init__(self, spark: SparkSession, store_dir: str, centroids: DataFrame) -> None:
-        self.spark = spark
-        self.store_dir = store_dir
+        self.parts = PartStore(
+            spark,
+            store_dir,
+            "cell int, neighbor_id bigint, v_c array<double>",
+            partition_by=("cell",),
+        )
         # K tiny rows — materialize once as the model table.
         self.centroids = centroids.localCheckpoint(eager=True)
-        os.makedirs(store_dir, exist_ok=True)
-
-    def _batch_dir(self, batch_id: int) -> str:
-        return os.path.join(self.store_dir, f"batch_id={batch_id}")
 
     def ingest_batch(self, batch_df: DataFrame, batch_id: int,
                      id_col: str = "vec_id", vec: str = "embedding") -> None:
         """foreachBatch hook: normalize, assign (zero-shuffle broadcast
-        projection), publish under batch_id via staging-rename."""
-        if is_compacted(self.store_dir, batch_id):
-            return  # replay of a folded batch: vectors already in the fold
+        projection), publish as this batch's cell-partitioned part."""
         c = batch_df.select(
             F.col(id_col).alias("neighbor_id"), as_double(F.col(vec)).alias("v_c")
         )
@@ -81,101 +71,14 @@ class IvfStreamIndex:
             "neighbor_id", F.transform("v_c", lambda x: x / F.col("_n")).alias("v_c")
         )
         assigned = ivf_assign(c, self.centroids, "v_c", ["neighbor_id"])
-        staging = os.path.join(self.store_dir, f"_staging_{batch_id}")
-        assigned.select("cell", "neighbor_id", "v_c").write.mode(
-            "overwrite"
-        ).partitionBy("cell").parquet(staging)
-        final = self._batch_dir(batch_id)
-        # Rename-aside swap (ADVICE r12, the publish_dir contract,
-        # hand-rolled here because the write stays cell-partitioned): a
-        # crash mid-swap never leaves a previously successful batch absent.
-        aside = staging + ".prev"
-        shutil.rmtree(aside, ignore_errors=True)
-        if os.path.exists(final):
-            os.rename(final, aside)
-        os.rename(staging, final)
-        shutil.rmtree(aside, ignore_errors=True)
-
-    def attach(self, stream_df: DataFrame, checkpoint: str,
-               id_col: str = "vec_id", vec: str = "embedding"):
-        return (
-            stream_df.writeStream.foreachBatch(
-                lambda df, bid: self.ingest_batch(df, bid, id_col=id_col, vec=vec)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    def compact(self) -> dict:
-        """Union-fold every `batch_id=<i>/cell=<c>` dir into ONE
-        `compacted_upto=<max>/cell=<c>` layout — vectors are disjoint
-        across batches (each arrives once per batch_id; replays overwrite),
-        so the fold is the same corpus behind one directory, still
-        cell-partitioned for pruned probes. Folded-batch replays are
-        dropped at ingest; crash debris (batch dirs at or below the fold)
-        is ignored by `corpus()` and swept by the next compact."""
-        upto = compacted_upto(self.store_dir)
-        live = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self.store_dir)
-            if d.startswith("batch_id=") and int(d.split("=", 1)[1]) > upto
-        )
-        if not live:
-            return {"folded_batches": 0, "upto": upto}
-        new_upto = max(live)
-        merged = self.corpus()
-        staging = os.path.join(self.store_dir, f"_staging_compacted_{new_upto}")
-        merged.write.mode("overwrite").partitionBy("cell").parquet(staging)
-        final = os.path.join(self.store_dir, f"compacted_upto={new_upto}")
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.replace(staging, final)
-        for d in os.listdir(self.store_dir):
-            keep = d == f"compacted_upto={new_upto}"
-            stale = (
-                (d.startswith("batch_id=") and int(d.split("=", 1)[1]) <= new_upto)
-                or d.startswith("compacted_upto=")
-                or d.startswith("_staging_")
-            )
-            if stale and not keep:
-                shutil.rmtree(os.path.join(self.store_dir, d), ignore_errors=True)
-        return {"folded_batches": len(live), "upto": new_upto}
+        self.parts.publish(assigned.select("cell", "neighbor_id", "v_c"), batch_id)
 
     def corpus(self) -> DataFrame:
         """Everything ingested: (cell, neighbor_id, v_c) with cell read
-        back from the partition layout — the newest compacted fold (if
-        any) + batch dirs newer than it, each read under its OWN basePath
-        so only `cell` is partition-discovered. An empty store (no batch
-        yet) serves an empty corpus — a query against it returns no
-        neighbors instead of PATH_NOT_FOUND."""
-        upto = compacted_upto(self.store_dir)
-        parts = []
-        if upto >= 0:
-            parts.append(os.path.join(self.store_dir, f"compacted_upto={upto}"))
-        parts.extend(
-            os.path.join(self.store_dir, d)
-            for d in sorted(os.listdir(self.store_dir))
-            if d.startswith("batch_id=") and int(d.split("=", 1)[1]) > upto
-        )
-        dfs = []
-        for p in parts:
-            try:
-                dfs.append(
-                    self.spark.read.option("basePath", p).parquet(p).select(
-                        F.col("cell").cast("int").alias("cell"), "neighbor_id", "v_c"
-                    )
-                )
-            except Exception:
-                continue  # empty/unreadable part: nothing published there yet
-        if not dfs:
-            return self.spark.createDataFrame(
-                [], "cell int, neighbor_id bigint, v_c array<double>"
-            )
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
+        back from the partition layout. An empty store (no batch yet)
+        serves an empty corpus — a query against it returns no neighbors
+        instead of PATH_NOT_FOUND."""
+        return self.parts.read().select("cell", "neighbor_id", "v_c")
 
     def serve_topk(self, queries: DataFrame, k: int = 5, nprobe: int = 4,
                    query_id: str = "query_id", vec: str = "embedding") -> DataFrame:

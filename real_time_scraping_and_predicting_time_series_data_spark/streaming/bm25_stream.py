@@ -19,64 +19,33 @@ document changes avgdl and idf RETROACTIVELY for every earlier score —
 freezing per-batch scores would serve a different (wrong) ranking than
 batch.  The index rows are the only state with that property.
 
-Same deployment assumption as the sibling stores: driver-visible
-filesystem publish via staging-rename; replays of a folded batch id are
-dropped (`is_compacted`); `compact()` folds the append-only store by pure
-union (`compact_union_store`).
+Store protocol: ``store_compaction.py``; the append-only index folds by
+plain union.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.text import _bm25_panel_df, _bm25_rank_from_tf, _bm25_tf
-from .store_compaction import (
-    compact_union_store,
-    is_compacted,
-    publish_dir,
-    read_store_grid,
-)
+from .store_compaction import MicroBatchStore, PartStore
 
 __all__ = ["Bm25StreamIndex"]
 
 _SCHEMA = "doc_id bigint, term string, tf bigint"
 
 
-class Bm25StreamIndex:
+class Bm25StreamIndex(MicroBatchStore):
     """Accumulates per-batch inverted-index shards and serves the exact
     batch BM25 ranking over all documents seen."""
 
     def __init__(self, spark: SparkSession, store_dir: str):
         self.spark = spark
-        self.store_dir = store_dir
-        os.makedirs(store_dir, exist_ok=True)
+        self.parts = PartStore(spark, store_dir, _SCHEMA)
 
-    def ingest_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch hook: publish this batch's (doc, term, tf) shard
-        under its batch_id (replays overwrite; folded replays drop)."""
-        if is_compacted(self.store_dir, batch_id):
-            return
-        tf = _bm25_tf(batch_df, "text", "doc_id").select(
-            "doc_id", "term", "tf"
-        )
-        publish_dir(tf, self.store_dir, f"batch_id={batch_id}")
-
-    def attach(self, stream_df: DataFrame, checkpoint: str):
-        return (
-            stream_df.writeStream.foreachBatch(
-                lambda df, bid: self.ingest_batch(df, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    def compact(self) -> dict:
-        """Fold the append-only index shards by pure union — bounded
-        directory growth, identical served multiset."""
-        return compact_union_store(self.spark, self.store_dir, _SCHEMA)
+    def batch_grid(self, batch_df: DataFrame) -> DataFrame:
+        """This batch's (doc, term, tf) shard."""
+        return _bm25_tf(batch_df, "text", "doc_id").select("doc_id", "term", "tf")
 
     def serve_topk(self, panel: tuple, k: int = 10, k1: float = 1.2, b: float = 0.75) -> DataFrame:
         """Exact batch ranking over everything ingested: the union of live
@@ -84,6 +53,5 @@ class Bm25StreamIndex:
         ranker — corpus stats (df/avgdl/N) derive fresh at serve time so
         late documents retroactively reweight earlier scores exactly as a
         batch rebuild would."""
-        tf = read_store_grid(self.spark, self.store_dir, _SCHEMA)
         qdf = _bm25_panel_df(self.spark, panel)
-        return _bm25_rank_from_tf(tf, qdf, k, k1, b, "doc_id")
+        return _bm25_rank_from_tf(self.parts.merged(), qdf, k, k1, b, "doc_id")

@@ -5,71 +5,34 @@ CM cells are ADDITIVE: sketch(A ∪ B) = sketch(A) + sketch(B) cell-wise for
 DISJOINT A, B — the count-grid merge law (grouped SUM over (r, b)), one
 tier below KMV's idempotent distinct-union (overlapping replays of the
 same rows would double-count; the store therefore relies on the family's
-disjoint-batch contract plus per-batch_id idempotent publish: an
-at-least-once REPLAY of the same batch overwrites its own directory and a
-folded batch is dropped at ingest, so the grid never double-counts a
-batch).
-
-Mechanics follow the mergeable-grid family (kmv_stream.py): per-batch
-cells under ``batch_id=<id>`` via staging-rename, `compact()` folds by
-grouped sum, empty store serves a typed-empty grid.
+disjoint-batch contract plus the per-batch_id idempotent publish of
+``store_compaction.py``, so the grid never double-counts a batch).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.sketch import _cm_tokens, cm_cells
-from .store_compaction import _fold, is_compacted, publish_dir, read_store_grid
+from .store_compaction import MicroBatchStore, PartStore, sum_merge
 
 __all__ = ["CmStreamSketch"]
 
 _GRID_SCHEMA = "r int, b bigint, cnt bigint"
 
 
-class CmStreamSketch:
+class CmStreamSketch(MicroBatchStore):
     """Accumulates per-batch Count-Min cell grids over the document token
     stream and serves the exact whole-stream sketch."""
 
     def __init__(self, spark: SparkSession, store_dir: str) -> None:
-        self.spark = spark
-        self.store_dir = store_dir
-        os.makedirs(store_dir, exist_ok=True)
+        self.parts = PartStore(spark, store_dir, _GRID_SCHEMA, sum_merge(("r", "b"), ("cnt",)))
 
     def batch_grid(self, docs_df: DataFrame) -> DataFrame:
         """This batch's sketch cells (≤ depth·width rows)."""
         return cm_cells(_cm_tokens(docs_df))
 
-    def ingest_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if is_compacted(self.store_dir, batch_id):
-            return
-        publish_dir(self.batch_grid(batch_df), self.store_dir, f"batch_id={batch_id}")
-
-    def compact(self) -> dict:
-        """Grouped-sum fold — the additive CM merge law."""
-        return _fold(
-            self.spark,
-            self.store_dir,
-            _GRID_SCHEMA,
-            lambda df: df.groupBy("r", "b").agg(F.sum("cnt").cast("long").alias("cnt")),
-        )
-
-    def attach(self, stream_df: DataFrame, checkpoint: str):
-        return (
-            stream_df.writeStream.foreachBatch(
-                lambda df, bid: self.ingest_batch(df, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-
     def merged(self) -> DataFrame:
-        """The whole-stream sketch: grouped sum of every live part —
-        bit-identical to the one-pass sketch under the disjointness
-        contract."""
-        grid = read_store_grid(self.spark, self.store_dir, _GRID_SCHEMA)
-        return grid.groupBy("r", "b").agg(F.sum("cnt").cast("long").alias("cnt"))
+        """The whole-stream sketch — bit-identical to the one-pass sketch
+        under the disjointness contract."""
+        return self.parts.merged()

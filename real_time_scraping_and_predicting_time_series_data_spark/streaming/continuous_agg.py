@@ -4,45 +4,37 @@
 A TimescaleDB-style continuous aggregate maintained incrementally:
 
 - **ingest**: each micro-batch is aggregated to *composable minute partials*
-  (count, sum, min, max per (key, minute bucket)) and written to the store —
-  per batch this touches only the batch's own buckets, never the history.
-  ``foreachBatch`` is at-least-once, so the write is made **idempotent per
-  batch_id**: every batch lands in its own deterministic
-  ``batch_id=<id>`` subdirectory with mode=overwrite — a replayed batch
-  overwrites its earlier attempt instead of double-counting;
+  (count, sum, min, max per (key, minute bucket)) and published as the
+  batch's part — per batch this touches only the batch's own buckets,
+  never the history;
 - **serve**: readers merge the store's partials (sum of sums, ...) at any
   requested resolution (minute/hour/day). Merging collapses the duplicate
   partial rows that arise when a bucket spans micro-batches, so appends
   never need read-modify-write — the store is append-only like the
   reference's tick table (``asyncio scraping.py:61``), but O(batch) per
   append instead of O(history);
-- **compact**: an optional maintenance pass rewrites the store with
-  duplicates pre-merged (same arithmetic as serve), bounding store size at
-  one row per (key, bucket). The swap is **atomic**: the compacted data is
-  written to the next ``gen=<n+1>`` directory under a hidden staging name,
-  renamed into place in one filesystem operation, and only then is the old
-  generation removed — a crash at any point leaves either the old or the
-  new generation fully readable (stale staging/old dirs are swept on the
-  next compact). Compaction must not run concurrently with ingest (batches
-  written to the old generation during a compact would be dropped by the
-  swap); concurrent serve() calls are safe — they resolve a generation once
-  and old generations are deleted only after the pointer moved.
+- **compact**: folds the parts with duplicates pre-merged (the minute
+  merge law), bounding the store at one row per (key, bucket).
 
-At 100 TB the store is hive-partitioned by bucket date and the serve-side
-merge touches only the requested time range; correctness does not depend on
-when (or whether) compaction ran — serve-after-append equals a batch
-recompute from raw, which the parity test asserts.
+Replay safety, the fold and its crash windows are the shared store
+protocol (``store_compaction.py``). At 100 TB the store is hive-partitioned
+by bucket date and the serve-side merge touches only the requested time
+range; correctness does not depend on when (or whether) compaction ran —
+serve-after-append equals a batch recompute from raw, which the parity
+test asserts.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .store_compaction import MicroBatchStore, PartStore
+
 __all__ = ["ContinuousAggregate"]
+
 
 def _partial_aggs():
     return (
@@ -62,72 +54,28 @@ def _merge_aggs():
     )
 
 
-class ContinuousAggregate:
+class ContinuousAggregate(MicroBatchStore):
     """Incrementally-maintained multi-resolution aggregate over a keyed tick
     stream (columns: ``user_id``, ``ts``, ``value``)."""
 
     def __init__(self, spark: SparkSession, store_dir: str, key: str = "user_id") -> None:
-        self.spark = spark
-        self.root = os.path.join(store_dir, "minute_partials")
         self.key = key
-        os.makedirs(self.root, exist_ok=True)
-
-    # -- generation layout ---------------------------------------------------
-
-    def _gens(self) -> list[int]:
-        return sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self.root)
-            if d.startswith("gen=")
+        self.parts = PartStore(
+            spark,
+            os.path.join(store_dir, "minute_partials"),
+            f"{key} bigint, bucket timestamp, n bigint, s double, mn double, mx double",
+            lambda df: df.groupBy(key, "bucket").agg(*_merge_aggs()),
         )
 
-    def _gen_dir(self) -> str:
-        """Current generation directory (highest gen number wins; a crashed
-        compact can leave an older gen behind — it is simply ignored)."""
-        gens = self._gens()
-        gen = gens[-1] if gens else 0
-        return os.path.join(self.root, f"gen={gen}")
-
-    # -- ingest -------------------------------------------------------------
-
-    def ingest_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch hook: fold the batch into minute partials and write
-        them to a per-batch_id directory with overwrite — idempotent under
-        at-least-once replay (a re-delivered batch replaces its own earlier
-        write instead of appending a duplicate)."""
-        target = os.path.join(self._gen_dir(), f"batch_id={batch_id}")
-        (
-            batch_df.groupBy(self.key, F.date_trunc("minute", "ts").alias("bucket"))
-            .agg(*_partial_aggs())
-            .write.mode("overwrite")
-            .parquet(target)
-        )
-
-    def attach(self, ticks: DataFrame, checkpoint: str):
-        """Wire a streaming DataFrame into the store and start the query."""
-        return (
-            ticks.writeStream.foreachBatch(self.ingest_batch)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    # -- serve --------------------------------------------------------------
+    def batch_grid(self, batch_df: DataFrame) -> DataFrame:
+        """This batch's minute partials."""
+        return batch_df.groupBy(
+            self.key, F.date_trunc("minute", "ts").alias("bucket")
+        ).agg(*_partial_aggs())
 
     def partials(self) -> DataFrame:
-        """The current generation's partial rows (without the batch_id
-        partition-discovery column). An empty store (no batch published
-        yet) serves empty partials, not PATH_NOT_FOUND."""
-        try:
-            df = self.spark.read.parquet(self._gen_dir())
-        except Exception:
-            return self.spark.createDataFrame(
-                [],
-                f"{self.key} bigint, bucket timestamp, n bigint, s double, "
-                "mn double, mx double",
-            )
-        return df.drop("batch_id") if "batch_id" in df.columns else df
+        """The live partial rows; empty before the first batch."""
+        return self.parts.read()
 
     def serve(self, resolution: str = "minute") -> DataFrame:
         """Merged view at ``minute``/``hour``/``day`` resolution: one grouped
@@ -146,25 +94,3 @@ class ContinuousAggregate:
             F.col("mn").alias("min_value"),
             F.col("mx").alias("max_value"),
         )
-
-    # -- maintenance --------------------------------------------------------
-
-    def compact(self) -> None:
-        """Pre-merge duplicate (key, bucket) partial rows — pure maintenance,
-        serve results are identical before and after. Must not run
-        concurrently with ingest (see module docstring); crash-safe via
-        write-new-generation + atomic rename + delete-old."""
-        gens = self._gens()
-        cur_gen = gens[-1] if gens else 0
-        cur_dir = os.path.join(self.root, f"gen={cur_gen}")
-        merged = self.partials().groupBy(self.key, "bucket").agg(*_merge_aggs())
-
-        staging = os.path.join(self.root, ".compact_staging")
-        shutil.rmtree(staging, ignore_errors=True)  # stale staging from a crash
-        merged.write.mode("overwrite").parquet(os.path.join(staging, "batch_id=compacted"))
-        os.rename(staging, os.path.join(self.root, f"gen={cur_gen + 1}"))  # atomic flip
-        # Old generations are unreferenced once the new dir exists; removal
-        # is safe to crash mid-way (highest gen still wins on recovery).
-        for g in self._gens():
-            if g <= cur_gen:
-                shutil.rmtree(os.path.join(self.root, f"gen={g}"), ignore_errors=True)

@@ -13,13 +13,13 @@ crash/replay must not duplicate OR lose documents. Decomposition:
   bucketed on ``content_hash`` so this anti join is zero-shuffle on the
   ledger side, and the probe side is one micro-batch — bounded work per
   batch regardless of corpus size;
-- **idempotent append**: accepted rows land in a deterministic
-  ``batch_id=<id>`` subdirectory with mode=overwrite (the
-  ``continuous_agg.py`` ledger pattern): ``foreachBatch`` is
+- **idempotent append**: accepted rows are the batch's part in the
+  shared store protocol (``store_compaction.py``): ``foreachBatch`` is
   at-least-once, and a replayed batch replaces its own earlier attempt.
-  The replay reads the ledger EXCLUDING its own batch directory —
-  otherwise a re-delivered batch would anti-join against its first
-  attempt's rows and silently drop everything.
+  The replay reads the ledger EXCLUDING its own part — otherwise a
+  re-delivered batch would anti-join against its first attempt's rows
+  and silently drop everything. Accepted rows are disjoint across
+  batches (the anti-join guarantees it), so the fold is a plain union.
 
 Invariant (pinned in tests/test_corpus_ingest.py): after any sequence of
 ingests and replays, ``serve()`` equals the batch ``exact_dedup`` survivor
@@ -30,91 +30,31 @@ survivor order.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .store_compaction import compacted_upto, is_compacted, publish_dir
+from .store_compaction import MicroBatchStore, PartStore
 
 __all__ = ["IncrementalCorpusStore"]
 
+# The served relation before the first batch: the input columns plus the
+# content hash (the columns of a later batch are carried through as-is).
+_EMPTY_SCHEMA = "doc_id bigint, text string, source string, content_hash string"
 
-class IncrementalCorpusStore:
+
+class IncrementalCorpusStore(MicroBatchStore):
     """First-seen-wins document store over columns
     ``(doc_id, text, source)`` (extra columns are carried through)."""
 
     def __init__(self, spark: SparkSession, store_dir: str) -> None:
         self.spark = spark
-        self.root = os.path.join(store_dir, "accepted")
-        os.makedirs(self.root, exist_ok=True)
-
-    def _batch_dirs(self, exclude_batch_id: int | None = None) -> list[str]:
-        """Live parts: the newest compacted fold (if any) + batch dirs
-        newer than it. Batch dirs at or below the fold are crash debris
-        (their rows are inside the fold) and are ignored."""
-        upto = compacted_upto(self.root)
-        out = []
-        if upto >= 0:
-            out.append(os.path.join(self.root, f"compacted_upto={upto}"))
-        for d in os.listdir(self.root):
-            if not d.startswith("batch_id="):
-                continue
-            if exclude_batch_id is not None and d == f"batch_id={exclude_batch_id}":
-                continue
-            if int(d.split("=", 1)[1]) <= upto:
-                continue
-            out.append(os.path.join(self.root, d))
-        return sorted(out)
-
-    def compact(self) -> dict:
-        """Fold every accepted ``batch_id=<i>`` directory into one
-        ``compacted_upto=<max>`` directory. Accepted rows are DISJOINT
-        across batches (the ledger anti-join guarantees it), so the fold
-        is a pure union — ``serve()`` and the ledger probe see the same
-        corpus, now behind one directory instead of one per micro-batch.
-        A replay of a folded batch is dropped at ingest: its verdicts are
-        already in the fold, which is exactly what the replay's
-        exclude-own-batch recomputation would have reproduced."""
-        upto = compacted_upto(self.root)
-        live = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self.root)
-            if d.startswith("batch_id=") and int(d.split("=", 1)[1]) > upto
-        )
-        if not live:
-            return {"folded_batches": 0, "upto": upto}
-        new_upto = max(live)
-        merged = self.spark.read.parquet(*self._batch_dirs())
-        staging = os.path.join(self.root, f".staging_compacted_upto={new_upto}")
-        shutil.rmtree(staging, ignore_errors=True)
-        merged.write.mode("overwrite").parquet(staging)
-        os.rename(staging, os.path.join(self.root, f"compacted_upto={new_upto}"))
-        for d in os.listdir(self.root):
-            keep = d == f"compacted_upto={new_upto}"
-            stale = (
-                (d.startswith("batch_id=") and int(d.split("=", 1)[1]) <= new_upto)
-                or d.startswith("compacted_upto=")
-                or d.startswith(".staging")
-                or d.startswith("_staging")
-            )
-            if stale and not keep:
-                shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)
-        return {"folded_batches": len(live), "upto": new_upto}
-
-    def _ledger_hashes(self, exclude_batch_id: int | None = None) -> DataFrame | None:
-        dirs = self._batch_dirs(exclude_batch_id)
-        if not dirs:
-            return None
-        # Hash-only projection: the scan reads one column of the store.
-        return self.spark.read.parquet(*dirs).select("content_hash")
+        self.parts = PartStore(spark, os.path.join(store_dir, "accepted"))
 
     # -- ingest -------------------------------------------------------------
 
     def ingest_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """foreachBatch hook: admit first-seen content, idempotently."""
-        if is_compacted(self.root, batch_id):
-            return  # replay of a folded batch: its verdicts are in the fold
         hashed = batch_df.withColumn("content_hash", F.sha2(F.col("text"), 256))
         w = Window.partitionBy("content_hash").orderBy("doc_id")
         survivors = (
@@ -122,32 +62,17 @@ class IncrementalCorpusStore:
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        ledger = self._ledger_hashes(exclude_batch_id=batch_id)
+        ledger = self.parts.read(exclude_batch_id=batch_id)
         if ledger is not None:
-            survivors = survivors.join(ledger, "content_hash", "left_anti")
-        # Atomic publish via publish_dir's rename-aside swap (ADVICE r12):
-        # a crash mid-write leaves only staging garbage, and a crash
-        # mid-swap never leaves a previously successful batch's rows
-        # absent — serve() never reads a partially-written batch dir, and
-        # the checkpoint replay rebuilds the batch cleanly.
-        publish_dir(survivors, self.root, f"batch_id={batch_id}")
-
-    def attach(self, docs: DataFrame, checkpoint: str):
-        """Wire a streaming document source into the store."""
-        return (
-            docs.writeStream.foreachBatch(self.ingest_batch)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+            # Hash-only projection: the scan reads one column of the store.
+            survivors = survivors.join(
+                ledger.select("content_hash"), "content_hash", "left_anti"
+            )
+        self.parts.publish(survivors, batch_id)
 
     # -- serve --------------------------------------------------------------
 
     def serve(self) -> DataFrame:
         """All accepted documents (the deduplicated corpus)."""
-        dirs = self._batch_dirs()
-        if not dirs:
-            raise FileNotFoundError(f"no accepted batches under {self.root}")
-        df = self.spark.read.parquet(*dirs)
-        return df.drop("batch_id") if "batch_id" in df.columns else df
+        df = self.parts.read()
+        return df if df is not None else self.spark.createDataFrame([], _EMPTY_SCHEMA)

@@ -15,26 +15,21 @@ over the df threshold and RETROACTIVELY re-flag earlier documents — which
 is exactly why the serve recomputes flags from the merged grid instead of
 freezing per-batch verdicts.
 
-Three stores, all published per-batch via staging-rename (at-least-once
-replays overwrite their own ``batch_id=<id>`` directory — the
-corpus_ingest idempotence pattern):
+Three relations, each its own part store (``store_compaction.py``):
 
-- ``df/batch_id=*``       (gram, nd)        — tiny mergeable grids; the
-  serve-side df merge touches ONLY these, never the postings;
-- ``postings/batch_id=*`` (doc_id, gram)    — the inverted index, needed
-  because flagging is per-document (posting volume, never doc × doc);
-- ``docs/batch_id=*``     (doc_id, n_grams) — per-doc denominators.
+- ``df``       (gram, nd)        — tiny mergeable grids, folded by sum;
+  the serve-side df merge touches ONLY these, never the postings;
+- ``postings`` (doc_id, gram)    — the inverted index, needed because
+  flagging is per-document (posting volume, never doc × doc);
+- ``docs``     (doc_id, n_grams) — per-doc denominators.
 
-Deployment assumption (shared with DriftStreamMonitor): the driver-local
-``os.replace`` publish is correct when ``store_dir`` is a filesystem the
-driver and executors share (local mode, NFS); on HDFS/S3 port the rename
-through the Hadoop FileSystem API or an atomic-commit table format. The
-grid math is storage-agnostic.
+Postings and doc bases are append-only (rows disjoint across batches) and
+fold by plain union. Each relation folds and guards replays on its own:
+a crash between folds leaves one folded and one not, and every relation
+is complete (fold + live tail) at all times.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,18 +37,12 @@ from pyspark.sql import functions as F
 from ..catalog import ensure_min_partitions
 from ..operators.dedup import shingles
 from ..operators.quality import boilerplate_scores
-from .store_compaction import (
-    compact_grid_store,
-    compact_union_store,
-    is_compacted,
-    publish_dir,
-    read_store_grid,
-)
+from .store_compaction import MicroBatchStore, PartStore, sum_merge
 
 __all__ = ["NgramDfStreamIndex"]
 
 
-class NgramDfStreamIndex:
+class NgramDfStreamIndex(MicroBatchStore):
     """Accumulates per-batch (gram, nd) df grids plus (doc_id, gram)
     postings and serves the exact cross-document boilerplate share over
     all documents seen."""
@@ -67,14 +56,17 @@ class NgramDfStreamIndex:
         id_col: str = "doc_id",
         text_col: str = "text",
     ) -> None:
-        self.spark = spark
-        self.store_dir = store_dir
         self.n = n
         self.threshold = threshold
         self.id_col = id_col
         self.text_col = text_col
-        for sub in ("df", "postings", "docs"):
-            os.makedirs(os.path.join(store_dir, sub), exist_ok=True)
+        self.parts = {
+            "df": PartStore(
+                spark, f"{store_dir}/df", "gram bigint, nd bigint", sum_merge(("gram",), ("nd",))
+            ),
+            "postings": PartStore(spark, f"{store_dir}/postings", "doc_id bigint, gram bigint"),
+            "docs": PartStore(spark, f"{store_dir}/docs", "doc_id bigint, n_grams bigint"),
+        }
 
     # -- ingest ---------------------------------------------------------
 
@@ -97,78 +89,21 @@ class NgramDfStreamIndex:
         base = sh.select("doc_id", F.size("grams").cast("long").alias("n_grams"))
         return inv, base
 
-    def _publish(self, df: DataFrame, sub: str, batch_id: int) -> None:
-        sub_dir = os.path.join(self.store_dir, sub)
-        if is_compacted(sub_dir, batch_id):
-            return  # replay of a folded batch: rows already in the fold
-        publish_dir(df, sub_dir, f"batch_id={batch_id}")
-
     def ingest_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """foreachBatch hook: publish this batch's df grid, postings, and
         doc base under its batch_id (replays overwrite, never
         double-count)."""
         inv, base = self.batch_index(batch_df)
         grid = inv.groupBy("gram").agg(F.count("*").cast("long").alias("nd"))
-        self._publish(grid, "df", batch_id)
-        self._publish(inv, "postings", batch_id)
-        self._publish(base, "docs", batch_id)
-
-    def attach(self, stream_df: DataFrame, checkpoint: str):
-        return (
-            stream_df.writeStream.foreachBatch(
-                lambda df, bid: self.ingest_batch(df, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    # -- serve ----------------------------------------------------------
-
-    _EMPTY = {
-        "df": "gram bigint, nd bigint",
-        "postings": "doc_id bigint, gram bigint",
-        "docs": "doc_id bigint, n_grams bigint",
-    }
-
-    def _read(self, sub: str) -> DataFrame:
-        return read_store_grid(
-            self.spark, os.path.join(self.store_dir, sub), self._EMPTY[sub]
-        )
-
-    def compact(self) -> dict:
-        """Fold all three sub-stores: the df grid by grouped sum (the
-        associative merge the serve already performs), postings and doc
-        bases by pure union (append-only, rows disjoint across batches by
-        the replay-overwrite contract). Served df AND boilerplate flags are
-        bit-identical before/after; directory growth is bounded for
-        long-lived streams. Each sub-store folds independently — a crash
-        between folds leaves one folded and one not, which is fine: every
-        sub-store is complete (fold + live tail) at all times, and
-        `_publish` drops replays per sub-store."""
-        return {
-            "df": compact_grid_store(
-                self.spark,
-                os.path.join(self.store_dir, "df"),
-                self._EMPTY["df"],
-                ("gram",),
-                ("nd",),
-            ),
-            "postings": compact_union_store(
-                self.spark, os.path.join(self.store_dir, "postings"), self._EMPTY["postings"]
-            ),
-            "docs": compact_union_store(
-                self.spark, os.path.join(self.store_dir, "docs"), self._EMPTY["docs"]
-            ),
-        }
+        self.parts["df"].publish(grid, batch_id)
+        self.parts["postings"].publish(inv, batch_id)
+        self.parts["docs"].publish(base, batch_id)
 
     def serve_df(self) -> DataFrame:
         """The merged (gram, nd) document-frequency grid — identical to
         counting the full postings store, but touching only the tiny
         per-batch grids."""
-        return self._read("df").groupBy("gram").agg(
-            F.sum("nd").cast("long").alias("nd")
-        )
+        return self.parts["df"].merged()
 
     def serve_boilerplate(self) -> DataFrame:
         """Boilerplate share per document over ALL documents ingested —
@@ -177,8 +112,8 @@ class NgramDfStreamIndex:
         grid is injected so the postings are only scanned for the
         per-document semi-join)."""
         return boilerplate_scores(
-            self._read("postings"),
-            self._read("docs").select("doc_id", "n_grams"),
+            self.parts["postings"].read(),
+            self.parts["docs"].read(),
             df_counts=self.serve_df(),
             threshold=self.threshold,
         )

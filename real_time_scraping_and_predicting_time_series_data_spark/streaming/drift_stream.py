@@ -7,18 +7,14 @@ statistic computed from it is EXACTLY the batch statistic over everything
 ingested (count addition is associative + commutative, and the KS supremum
 is a pure function of the merged grid).
 
-Idempotence follows the corpus_ingest pattern: per-batch grids land in
-``batch_id=<id>`` directories via staging-rename, so an at-least-once
-replay overwrites its own directory instead of double-counting. At 100 TB
-the per-batch state is |distinct values in batch| rows and the serve-side
-merge touches only grids — the raw stream is never re-read. This is the
-production shape for "alert when a new source's distribution drifts from
-the reference corpus" gates.
+Store protocol (parts, replay guard, fold): ``store_compaction.py``. At
+100 TB the per-batch state is |distinct values in batch| rows and the
+serve-side merge touches only grids — the raw stream is never re-read.
+This is the production shape for "alert when a new source's distribution
+drifts from the reference corpus" gates.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,30 +25,14 @@ from ..operators.stats import (
     mann_whitney_from_value_grid,
     psi_from_value_grid,
 )
-from .store_compaction import (
-    compact_grid_store,
-    is_compacted,
-    publish_dir,
-    read_store_grid,
-)
+from .store_compaction import MicroBatchStore, PartStore, sum_merge
 
 __all__ = ["DriftStreamMonitor"]
 
 
-
-class DriftStreamMonitor:
+class DriftStreamMonitor(MicroBatchStore):
     """Accumulates (value, count_a, count_b) grids per micro-batch and
-    serves the exact two-sample KS distance over all data seen.
-
-    Deployment assumption (ADVICE r4): ``ingest_batch`` publishes each
-    batch by a Spark parquet write into a staging path followed by a
-    DRIVER-LOCAL ``os.replace``/``shutil.rmtree`` — correct only when
-    ``store_dir`` is a filesystem shared by driver and executors (local
-    mode, NFS). On HDFS/S3 the driver-local rename would operate on the
-    wrong filesystem: port the staging-rename through the Hadoop
-    ``FileSystem`` API (``spark._jvm.org.apache.hadoop.fs.FileSystem``)
-    or publish via an atomic-commit table format (Delta/Iceberg) instead.
-    The grid math itself is storage-agnostic."""
+    serves the exact two-sample KS distance over all data seen."""
 
     def __init__(
         self,
@@ -64,20 +44,15 @@ class DriftStreamMonitor:
         group_b: str = "src1",
         value_type: str = "bigint",
     ) -> None:
-        self.spark = spark
-        self.store_dir = store_dir
         self.value_col = value_col
         self.group_col = group_col
         self.group_a = group_a
         self.group_b = group_b
-        # explicit grid schema: typed-empty serves pre-ingest AND a stable
-        # read schema for the compacted/live union (value_type follows the
-        # configured value column; counts are always long)
+        # value_type follows the configured value column; counts are long
         self.grid_schema = f"v {value_type}, ca bigint, cb bigint"
-        os.makedirs(store_dir, exist_ok=True)
-
-    def _batch_dir(self, batch_id: int) -> str:
-        return os.path.join(self.store_dir, f"batch_id={batch_id}")
+        self.parts = PartStore(
+            spark, store_dir, self.grid_schema, sum_merge(("v",), ("ca", "cb"))
+        )
 
     def batch_grid(self, df: DataFrame) -> DataFrame:
         """This batch's (v, ca, cb) value grid — same tagging as the batch
@@ -93,47 +68,11 @@ class DriftStreamMonitor:
             F.sum("a").cast("long").alias("ca"), F.sum("b").cast("long").alias("cb")
         )
 
-    def ingest_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch hook: publish this batch's grid under its batch_id
-        (staging-rename → replays overwrite, never double-count). A replay
-        of a batch already folded by `compact()` is DROPPED — its rows are
-        inside the compacted grid and re-publishing would double-count."""
-        if is_compacted(self.store_dir, batch_id):
-            return
-        publish_dir(self.batch_grid(batch_df), self.store_dir, f"batch_id={batch_id}")
-
-    def attach(self, stream_df: DataFrame, checkpoint: str):
-        return (
-            stream_df.writeStream.foreachBatch(
-                lambda df, bid: self.ingest_batch(df, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    def compact(self) -> dict:
-        """Fold every published batch grid into one `compacted_upto=<id>`
-        dir (associative grouped-sum merge → every serve statistic is
-        bit-identical before/after); bounds directory growth for
-        long-lived streams. See streaming/store_compaction.py for the
-        replay/crash-safety argument."""
-        return compact_grid_store(
-            self.spark, self.store_dir, self.grid_schema, ("v",), ("ca", "cb")
-        )
-
     def serve_grid(self) -> DataFrame:
-        """The merged value grid: union of the compacted grid (if any) and
-        newer per-batch grids + one grouped sum — identical to the batch
-        grid of everything ingested. Before the first batch publishes,
-        serve an EMPTY grid (long-typed value, the default n_chars config)
-        instead of raising PATH_NOT_FOUND — a dashboard may poll the
-        monitor before ingest starts; the downstream statistics already
-        define the degenerate-grid case."""
-        merged = read_store_grid(self.spark, self.store_dir, self.grid_schema)
-        return merged.groupBy("v").agg(
-            F.sum("ca").cast("long").alias("ca"), F.sum("cb").cast("long").alias("cb")
-        )
+        """The merged value grid — identical to the batch grid of
+        everything ingested; an empty grid before the first batch (the
+        downstream statistics define the degenerate-grid case)."""
+        return self.parts.merged()
 
     def serve_ks(self) -> DataFrame:
         """Exact KS distance over all data seen — bit-identical to

@@ -14,24 +14,14 @@ exactly why the serve recomputes from the merged grid instead of
 freezing per-batch weights (a data-selection service must re-rank its
 backlog as the target distribution estimate sharpens).
 
-Stores, published per-batch via staging-rename (at-least-once replays
-overwrite their own ``batch_id=<id>`` directory — the corpus_ingest
-idempotence pattern):
+Two relations, each its own part store (``store_compaction.py``):
 
-- ``grid/batch_id=*`` (b, cr, ct)      — tiny mergeable LM grids;
-- ``db/batch_id=*``   (doc_id, b, n)   — per-doc bucket counts (linear in
-  tokens, never doc × doc).
-
-Deployment assumption (shared with DriftStreamMonitor): the driver-local
-``os.replace`` publish is correct when ``store_dir`` is a filesystem the
-driver and executors share; on HDFS/S3 port the rename through the Hadoop
-FileSystem API or an atomic-commit table format.  The grid math is
-storage-agnostic.
+- ``grid`` (b, cr, ct)      — tiny mergeable LM grids, folded by sum;
+- ``db``   (doc_id, b, n)   — per-doc bucket counts (linear in tokens,
+  never doc × doc), append-only and folded by plain union.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,25 +29,14 @@ from pyspark.sql import functions as F
 from ..functions.hashing import md5_60
 from ..operators.corpus import _DSIR_BUCKETS, dsir_score
 from ..operators.text import words_of
-from .store_compaction import (
-    compact_grid_store,
-    compact_union_store,
-    is_compacted,
-    publish_dir,
-    read_store_grid,
-)
+from .store_compaction import MicroBatchStore, PartStore, sum_merge
 
 __all__ = ["DsirStreamModel"]
 
 
-class DsirStreamModel:
+class DsirStreamModel(MicroBatchStore):
     """Accumulates per-batch hashed-unigram LM grids plus per-doc bucket
     counts and serves exact DSIR weights over all documents seen."""
-
-    _EMPTY = {
-        "grid": "b bigint, cr bigint, ct bigint",
-        "db": "doc_id bigint, b bigint, n bigint",
-    }
 
     def __init__(
         self,
@@ -68,22 +47,21 @@ class DsirStreamModel:
         id_col: str = "doc_id",
         text_col: str = "text",
     ) -> None:
-        self.spark = spark
-        self.store_dir = store_dir
         self.target_pred = target_pred
         self.buckets = buckets
         self.id_col = id_col
         self.text_col = text_col
-        for sub in ("grid", "db"):
-            os.makedirs(os.path.join(store_dir, sub), exist_ok=True)
+        self.parts = {
+            "grid": PartStore(
+                spark,
+                f"{store_dir}/grid",
+                "b bigint, cr bigint, ct bigint",
+                sum_merge(("b",), ("cr", "ct")),
+            ),
+            "db": PartStore(spark, f"{store_dir}/db", "doc_id bigint, b bigint, n bigint"),
+        }
 
     # -- ingest ---------------------------------------------------------
-
-    def _publish(self, df: DataFrame, sub: str, batch_id: int) -> None:
-        sub_dir = os.path.join(self.store_dir, sub)
-        if is_compacted(sub_dir, batch_id):
-            return  # replay of a folded batch: rows already in the fold
-        publish_dir(df, sub_dir, f"batch_id={batch_id}")
 
     def ingest_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """foreachBatch hook: publish this batch's LM grid and per-doc
@@ -101,56 +79,17 @@ class DsirStreamModel:
             F.sum(F.when(F.col("is_tgt"), 1).otherwise(0)).cast("long").alias("ct"),
         )
         db = toks.groupBy("doc_id", "b").agg(F.count("*").cast("long").alias("n"))
-        self._publish(grid, "grid", batch_id)
-        self._publish(db, "db", batch_id)
-
-    def attach(self, stream_df: DataFrame, checkpoint: str):
-        return (
-            stream_df.writeStream.foreachBatch(
-                lambda df, bid: self.ingest_batch(df, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    # -- serve ----------------------------------------------------------
-
-    def _read(self, sub: str) -> DataFrame:
-        return read_store_grid(
-            self.spark, os.path.join(self.store_dir, sub), self._EMPTY[sub]
-        )
-
-    def compact(self) -> dict:
-        """Fold both sub-stores: the LM grid by grouped sum (the
-        associative merge the serve performs anyway), the per-doc counts
-        by pure union (rows disjoint across batches under the
-        replay-overwrite contract).  Served weights are bit-identical
-        before/after; directory growth stays bounded."""
-        return {
-            "grid": compact_grid_store(
-                self.spark,
-                os.path.join(self.store_dir, "grid"),
-                self._EMPTY["grid"],
-                ("b",),
-                ("cr", "ct"),
-            ),
-            "db": compact_union_store(
-                self.spark, os.path.join(self.store_dir, "db"), self._EMPTY["db"]
-            ),
-        }
+        self.parts["grid"].publish(grid, batch_id)
+        self.parts["db"].publish(db, batch_id)
 
     def serve_model(self) -> DataFrame:
         """The merged (b, cr, ct) LM grid over everything ingested."""
-        return self._read("grid").groupBy("b").agg(
-            F.sum("cr").cast("long").alias("cr"),
-            F.sum("ct").cast("long").alias("ct"),
-        )
+        return self.parts["grid"].merged()
 
     def serve_weights(self) -> DataFrame:
         """DSIR weights for every ingested document under the CURRENT
         merged model — bit-identical to `corpus_dsir_weights` run as one
         batch over the same rows (shared `dsir_score` core)."""
         return dsir_score(
-            self._read("db"), self.serve_model(), buckets=self.buckets
+            self.parts["db"].read(), self.serve_model(), buckets=self.buckets
         )

@@ -11,76 +11,39 @@ batches (a strictly weaker requirement than the count grids' disjointness
 contract).  State is bounded by |users|, not |events| — the user
 dimension is the right asymptote for an experiment readout, and the
 served z/p is EXACTLY the batch statistic over every event ingested
-(shared `two_proportion_from_bits` core).
-
-Mechanics follow the mergeable-grid family: per-batch bit grids under
-``batch_id=<id>`` via staging-rename (replays overwrite), `compact()`
-folds by grouped max (`compact_max_store`), empty store serves typed-empty.
-Same driver-local-rename deployment assumption as the other stores.
+(shared `two_proportion_from_bits` core).  Store protocol:
+``store_compaction.py``.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.stats import conversion_bits, two_proportion_from_bits
-from .store_compaction import (
-    compact_max_store,
-    is_compacted,
-    publish_dir,
-    read_store_grid,
-)
+from .store_compaction import MicroBatchStore, PartStore, max_merge
 
 __all__ = ["ExperimentStreamMonitor"]
 
 _GRID_SCHEMA = "cohort bigint, user_id bigint, conv bigint"
 
 
-class ExperimentStreamMonitor:
+class ExperimentStreamMonitor(MicroBatchStore):
     """Accumulates per-user conversion bits per micro-batch and serves the
     exact two-proportion z readout over all events seen."""
 
     def __init__(self, spark: SparkSession, store_dir: str) -> None:
-        self.spark = spark
-        self.store_dir = store_dir
-        os.makedirs(store_dir, exist_ok=True)
+        self.parts = PartStore(
+            spark, store_dir, _GRID_SCHEMA, max_merge(("cohort", "user_id"), ("conv",))
+        )
 
     def batch_grid(self, events_df: DataFrame) -> DataFrame:
         """This batch's (cohort, user_id, conv) bit grid."""
         return conversion_bits(events_df)
 
-    def ingest_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if is_compacted(self.store_dir, batch_id):
-            return
-        publish_dir(self.batch_grid(batch_df), self.store_dir, f"batch_id={batch_id}")
-
-    def compact(self) -> dict:
-        """Grouped-MAX fold — every served statistic bit-identical across
-        the fold (max is associative + commutative + idempotent)."""
-        return compact_max_store(
-            self.spark, self.store_dir, _GRID_SCHEMA, ("cohort", "user_id"), ("conv",)
-        )
-
-    def attach(self, stream_df: DataFrame, checkpoint: str):
-        return (
-            stream_df.writeStream.foreachBatch(
-                lambda df, bid: self.ingest_batch(df, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-
     def serve_bits(self) -> DataFrame:
-        """Merged per-user bits: grouped max over every live part —
-        identical to `conversion_bits` over all ingested events."""
-        merged = read_store_grid(self.spark, self.store_dir, _GRID_SCHEMA)
-        return merged.groupBy("cohort", "user_id").agg(
-            F.max("conv").cast("long").alias("conv")
-        )
+        """Merged per-user bits — identical to `conversion_bits` over all
+        ingested events."""
+        return self.parts.merged()
 
     def serve_readout(self) -> DataFrame:
         """(n0, n1, c0, c1, conv0, conv1, z, p_value) over everything

@@ -16,27 +16,17 @@ same estimator, but summed integer moments are exactly mergeable where
 RLS's float recursion is order-sensitive — the right trade for a
 distributed store under an oracle.
 
-Store contract (shared with the sibling accumulators): per-batch moment
-grids land under ``batch_id=<id>`` via the crash-safe rename-aside
-publish; at-least-once replays overwrite their own directory; folded
-replays drop at ingest; ``compact()`` folds by the grouped-sum merge
-(`compact_grid_store`), after which the store is 12 rows regardless of
-stream lifetime.
+Store protocol: ``store_compaction.py``; the moment grids fold by the
+grouped-sum merge, after which the store is 12 rows regardless of stream
+lifetime.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .store_compaction import (
-    compact_grid_store,
-    is_compacted,
-    publish_dir,
-    read_store_grid,
-)
+from .store_compaction import MicroBatchStore, PartStore, sum_merge
 
 __all__ = ["ForecastGramStore", "MOMENT_KEYS"]
 
@@ -75,50 +65,28 @@ def moment_grid(t: DataFrame) -> DataFrame:
     return g.select(F.explode(pairs).alias("p")).select("p.k", "p.v")
 
 
-class ForecastGramStore:
+class ForecastGramStore(MicroBatchStore):
     """Mergeable sufficient-statistics store for the two-horizon AR(2)
     forecaster; ``coefficients()`` is the O(batch)-retrain serve."""
 
     def __init__(self, spark: SparkSession, store_dir: str):
-        self.spark = spark
-        self.store_dir = store_dir
-        os.makedirs(store_dir, exist_ok=True)
+        self.parts = PartStore(spark, store_dir, _SCHEMA, sum_merge(("k",), ("v",)))
 
-    def ingest_batch(self, t: DataFrame, batch_id: int) -> None:
-        """foreachBatch hook: publish this batch's 12-row moment grid
-        (tiny regardless of batch size).  ``t`` carries complete feature
-        rows (x1, x2, y1, y2); an empty batch publishes zero moments
-        (count 0), which merge as the identity."""
-        if is_compacted(self.store_dir, batch_id):
-            return
-        publish_dir(moment_grid(t), self.store_dir, f"batch_id={batch_id}")
-
-    def attach(self, stream_df: DataFrame, checkpoint: str):
-        return (
-            stream_df.writeStream.foreachBatch(
-                lambda df, bid: self.ingest_batch(df, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    def compact(self) -> dict:
-        """Fold live grids by grouped BIGINT sum — 12 rows afterwards."""
-        return compact_grid_store(
-            self.spark, self.store_dir, _SCHEMA, ("k",), ("v",)
-        )
+    def batch_grid(self, t: DataFrame) -> DataFrame:
+        """This batch's 12-row moment grid (tiny regardless of batch
+        size).  ``t`` carries complete feature rows (x1, x2, y1, y2); an
+        empty batch publishes zero moments (count 0), which merge as the
+        identity."""
+        return moment_grid(t)
 
     def serve_moments(self) -> DataFrame:
         """Merged moments as ONE row of named BIGINT columns — identical
         to the batch one-pass aggregate over the union of all ingested
         feature rows (integer sums commute with the batch split)."""
-        grid = read_store_grid(self.spark, self.store_dir, _SCHEMA)
+        grid = self.parts.merged()
         return grid.agg(
             *[
-                F.coalesce(
-                    F.sum(F.when(F.col("k") == k, F.col("v"))), F.lit(0)
-                )
+                F.coalesce(F.max(F.when(F.col("k") == k, F.col("v"))), F.lit(0))
                 .cast("long")
                 .alias(k)
                 for k in MOMENT_KEYS

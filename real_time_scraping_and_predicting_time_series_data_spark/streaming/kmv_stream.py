@@ -7,91 +7,58 @@ the union — associative, commutative, idempotent, so this store tolerates
 arbitrary row duplication across batches (strictly stronger than the
 count grids' disjointness contract, same tier as the experiment store's
 grouped MAX).  Per-batch state is each batch's own k smallest distinct
-60-bit hashes (≤ k BIGINTs per batch); the serve merges live parts,
-dedups, and re-cuts to k — bit-identical to the batch sketch over
-everything ingested because order statistics of a fixed hash set are
-deterministic.
-
-Mechanics follow the mergeable-grid family: per-batch parts under
-``batch_id=<id>`` via staging-rename (replays overwrite), `compact()`
-folds by distinct-union-then-keep-k, empty store serves typed-empty.
+60-bit hashes (≤ k BIGINTs per batch); the merge dedups the live parts
+and re-cuts to k — bit-identical to the batch sketch over everything
+ingested because order statistics of a fixed hash set are deterministic.
+Store protocol: ``store_compaction.py``.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_60
 from ..operators.sketch import _KMV_K
-from .store_compaction import _fold, is_compacted, publish_dir, read_store_grid
+from .store_compaction import MicroBatchStore, PartStore
 
 __all__ = ["KmvStreamSketch"]
 
 _GRID_SCHEMA = "h60 bigint"
 
 
-class KmvStreamSketch:
+def _k_smallest(df: DataFrame, k: int) -> DataFrame:
+    return df.select("h60").distinct().orderBy("h60").limit(k)
+
+
+class KmvStreamSketch(MicroBatchStore):
     """Accumulates per-batch k-minimum-value sets and serves the exact
     whole-stream distinct sketch."""
 
     def __init__(self, spark: SparkSession, store_dir: str, k: int = _KMV_K) -> None:
-        self.spark = spark
-        self.store_dir = store_dir
         self.k = k
-        os.makedirs(store_dir, exist_ok=True)
+        self.parts = PartStore(
+            spark, store_dir, _GRID_SCHEMA, lambda df: _k_smallest(df, k)
+        )
 
     def batch_grid(self, pairs_df: DataFrame) -> DataFrame:
         """This batch's sketch: the k smallest distinct hashes of the
         (l_partkey, l_suppkey) pair key."""
-        return (
-            pairs_df.select(
-                md5_60(
-                    F.concat_ws(
-                        ":",
-                        F.col("l_partkey").cast("string"),
-                        F.col("l_suppkey").cast("string"),
-                    )
-                ).alias("h60")
-            )
-            .distinct()
-            .orderBy("h60")
-            .limit(self.k)
+        h = pairs_df.select(
+            md5_60(
+                F.concat_ws(
+                    ":",
+                    F.col("l_partkey").cast("string"),
+                    F.col("l_suppkey").cast("string"),
+                )
+            ).alias("h60")
         )
-
-    def ingest_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if is_compacted(self.store_dir, batch_id):
-            return
-        publish_dir(self.batch_grid(batch_df), self.store_dir, f"batch_id={batch_id}")
-
-    def compact(self) -> dict:
-        """Distinct-union-then-keep-k fold — the KMV merge law."""
-        k = self.k
-        return _fold(
-            self.spark,
-            self.store_dir,
-            _GRID_SCHEMA,
-            lambda df: df.select("h60").distinct().orderBy("h60").limit(k),
-        )
-
-    def attach(self, stream_df: DataFrame, checkpoint: str):
-        return (
-            stream_df.writeStream.foreachBatch(
-                lambda df, bid: self.ingest_batch(df, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+        return _k_smallest(h, self.k)
 
     def serve_sketch(self) -> DataFrame:
         """(k, kth, kmv_estimate) over everything ingested — bit-identical
         to the batch sketch (shared order-statistic arithmetic)."""
-        merged = read_store_grid(self.spark, self.store_dir, _GRID_SCHEMA)
-        small = merged.select("h60").distinct().orderBy("h60").limit(self.k)
-        s = small.agg(
+        s = self.parts.merged().agg(
             F.count("*").cast("long").alias("k"),
             F.max("h60").cast("long").alias("kth"),
         )

@@ -9,19 +9,8 @@ the quantized (pc, pos, neg) score grid — bounded at 1e6+1 cells no matter
 how much data arrives — and grids merge by grouped sum (associative +
 commutative), so the served AUC is EXACTLY the batch AUC over all ingested
 rows: `roc_auc_from_grid` is a pure function of the merged grid and its 2U
-numerator is BIGINT arithmetic, bit-identical, not just close.
-
-Mechanics follow the mergeable-grid family (drift_stream / quantile_stream
-/ seasonality_stream): per-batch grids land in ``batch_id=<id>``
-directories via staging-rename (at-least-once replays overwrite, never
-double-count); `compact()` folds published grids into one
-``compacted_upto=<id>`` directory with every served statistic pinned
-identical across the fold; an empty store serves typed-empty results.
-
-Deployment assumption (same as DriftStreamMonitor): the staging-rename is
-a DRIVER-LOCAL ``os.replace`` — correct only when ``store_dir`` is shared
-by driver and executors (local mode, NFS).  On HDFS/S3, route the rename
-through the Hadoop ``FileSystem`` API or an atomic-commit table format.
+numerator is BIGINT arithmetic, bit-identical, not just close.  Store
+protocol: ``store_compaction.py``.
 
 Reference fidelity note: the reference's eval loop recomputes a rolling
 RMSE over its whole in-memory ledger each round (lvmh_forecaster2.py:
@@ -31,29 +20,21 @@ with O(|grid|) state and O(batch) incremental work.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.stats import (
     average_precision_from_grid,
     roc_auc_from_grid,
     score_grid_from_documents,
 )
-from .store_compaction import (
-    compact_grid_store,
-    is_compacted,
-    publish_dir,
-    read_store_grid,
-)
+from .store_compaction import MicroBatchStore, PartStore, sum_merge
 
 __all__ = ["ModelQualityStreamMonitor"]
 
 _GRID_SCHEMA = "pc bigint, pos bigint, neg bigint"
 
 
-class ModelQualityStreamMonitor:
+class ModelQualityStreamMonitor(MicroBatchStore):
     """Accumulates quantized (pc, pos, neg) score grids of a FROZEN
     logistic classifier per micro-batch and serves exact ranking metrics
     (ROC AUC, average precision, best F1) over all labeled rows seen."""
@@ -61,50 +42,19 @@ class ModelQualityStreamMonitor:
     def __init__(
         self, spark: SparkSession, store_dir: str, w0: float, w1: float, w2: float
     ) -> None:
-        self.spark = spark
-        self.store_dir = store_dir
         self.w = (float(w0), float(w1), float(w2))
-        os.makedirs(store_dir, exist_ok=True)
+        self.parts = PartStore(
+            spark, store_dir, _GRID_SCHEMA, sum_merge(("pc",), ("pos", "neg"))
+        )
 
     def batch_grid(self, docs_df: DataFrame) -> DataFrame:
         """This batch's (pc, pos, neg) grid — reduced before storage."""
         return score_grid_from_documents(docs_df, *self.w)
 
-    def ingest_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch hook: publish this batch's grid under its batch_id
-        (staging-rename → replays overwrite, never double-count); a replay
-        of a batch already folded by `compact()` is dropped."""
-        if is_compacted(self.store_dir, batch_id):
-            return
-        publish_dir(self.batch_grid(batch_df), self.store_dir, f"batch_id={batch_id}")
-
-    def compact(self) -> dict:
-        """Fold every published batch grid into one `compacted_upto=<id>`
-        dir — the grouped-sum merge is associative, so every served metric
-        is bit-identical before/after the fold."""
-        return compact_grid_store(
-            self.spark, self.store_dir, _GRID_SCHEMA, ("pc",), ("pos", "neg")
-        )
-
-    def attach(self, stream_df: DataFrame, checkpoint: str):
-        return (
-            stream_df.writeStream.foreachBatch(
-                lambda df, bid: self.ingest_batch(df, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-
     def serve_grid(self) -> DataFrame:
-        """The merged score grid: union of the compacted grid (if any) and
-        newer per-batch grids + one grouped sum — identical to scoring
-        everything ingested in one batch."""
-        merged = read_store_grid(self.spark, self.store_dir, _GRID_SCHEMA)
-        return merged.groupBy("pc").agg(
-            F.sum("pos").cast("long").alias("pos"),
-            F.sum("neg").cast("long").alias("neg"),
-        )
+        """The merged score grid — identical to scoring everything
+        ingested in one batch."""
+        return self.parts.merged()
 
     def serve_roc_auc(self) -> DataFrame:
         """(n_pos, n_neg, auc_num2, auc) over everything ingested —

@@ -16,9 +16,10 @@ Admission rule (first-arrival-wins, deterministic):
   size — followed by verification against only the colliding ledger
   docs' stored shingle sets;
 - **idempotent append**: accepted rows (with their shingle sets and band
-  buckets, so future probes never recompute them) land in a
-  ``batch_id=<id>`` directory via the staging-rename publish; a replayed
-  batch excludes its own directory from the ledger read.
+  buckets, so future probes never recompute them) are the batch's part
+  in the shared store protocol (``store_compaction.py``); a replayed
+  batch excludes its own part from the ledger read, and the fold is a
+  plain union (accepted rows are disjoint across batches).
 
 Served-corpus invariant (pinned in tests/test_neardup_ingest.py): no two
 documents in ``serve()`` BOTH share a MinHash band bucket AND have
@@ -35,12 +36,9 @@ with exact Jaccard before rejection, so there are no false rejections.
 from __future__ import annotations
 
 import os
-import shutil
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from .store_compaction import compacted_upto, is_compacted, publish_dir
 
 from ..operators.dedup import (
     connected_components,
@@ -48,6 +46,7 @@ from ..operators.dedup import (
     shingle_sets,
     verify_candidates_jaccard,
 )
+from .store_compaction import MicroBatchStore, PartStore
 
 __all__ = ["NearDupCorpusStore"]
 
@@ -72,7 +71,12 @@ def _band_buckets(sigs: DataFrame, num_perm: int, bands: int) -> DataFrame:
     )
 
 
-class NearDupCorpusStore:
+# The served relation before the first batch (later batches carry their
+# input columns through as-is).
+_EMPTY_SCHEMA = "doc_id bigint, text string, source string"
+
+
+class NearDupCorpusStore(MicroBatchStore):
     """First-seen-wins near-dup-free document store over columns
     ``(doc_id, text, source)``."""
 
@@ -86,75 +90,19 @@ class NearDupCorpusStore:
         bands: int = 4,
     ) -> None:
         self.spark = spark
-        self.root = os.path.join(store_dir, "accepted")
+        self.parts = PartStore(spark, os.path.join(store_dir, "accepted"))
         self.threshold = threshold
         self.n = n
         self.num_perm = num_perm
         self.bands = bands
-        os.makedirs(self.root, exist_ok=True)
-
-    def _batch_dirs(self, exclude_batch_id: int | None = None) -> list[str]:
-        """Live parts: the newest compacted fold (if any) + batch dirs
-        newer than it (at-or-below-fold dirs are crash debris, ignored)."""
-        upto = compacted_upto(self.root)
-        out = []
-        if upto >= 0:
-            out.append(os.path.join(self.root, f"compacted_upto={upto}"))
-        for d in os.listdir(self.root):
-            if not d.startswith("batch_id="):
-                continue
-            if exclude_batch_id is not None and d == f"batch_id={exclude_batch_id}":
-                continue
-            if int(d.split("=", 1)[1]) <= upto:
-                continue
-            out.append(os.path.join(self.root, d))
-        return sorted(out)
-
-    def compact(self) -> dict:
-        """Union-fold every accepted batch dir into one
-        ``compacted_upto=<max>`` dir (accepted rows are disjoint across
-        batches by the admission anti-join); serve() and the ledger probe
-        are unchanged, folded-batch replays are dropped at ingest. Same
-        rename-then-sweep crash window as store_compaction."""
-        upto = compacted_upto(self.root)
-        live = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self.root)
-            if d.startswith("batch_id=") and int(d.split("=", 1)[1]) > upto
-        )
-        if not live:
-            return {"folded_batches": 0, "upto": upto}
-        new_upto = max(live)
-        merged = self.spark.read.parquet(*self._batch_dirs())
-        staging = os.path.join(self.root, f".staging_compacted_upto={new_upto}")
-        shutil.rmtree(staging, ignore_errors=True)
-        merged.write.mode("overwrite").parquet(staging)
-        os.rename(staging, os.path.join(self.root, f"compacted_upto={new_upto}"))
-        for d in os.listdir(self.root):
-            keep = d == f"compacted_upto={new_upto}"
-            stale = (
-                (d.startswith("batch_id=") and int(d.split("=", 1)[1]) <= new_upto)
-                or d.startswith("compacted_upto=")
-                or d.startswith(".staging")
-                or d.startswith("_staging")
-            )
-            if stale and not keep:
-                shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)
-        return {"folded_batches": len(live), "upto": new_upto}
-
-    def _ledger(self, exclude_batch_id: int | None = None) -> DataFrame | None:
-        dirs = self._batch_dirs(exclude_batch_id)
-        if not dirs:
-            return None
-        return self.spark.read.parquet(*dirs)
 
     # -- ingest -------------------------------------------------------------
 
     def ingest_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """foreachBatch hook: admit near-dup-free representatives,
         idempotently per batch_id."""
-        if is_compacted(self.root, batch_id):
-            return  # replay of a folded batch: its verdicts are in the fold
+        if self.parts.is_compacted(batch_id):
+            return  # skip the eager work: publish would drop the replay
         sets = shingle_sets(batch_df, id_col="doc_id", text="text", n=self.n).localCheckpoint(
             eager=True
         )
@@ -182,7 +130,7 @@ class NearDupCorpusStore:
 
         # cross-batch: probe the ledger's band buckets, verify survivors
         survivors = reps
-        ledger = self._ledger(exclude_batch_id=batch_id)
+        ledger = self.parts.read(exclude_batch_id=batch_id)
         if ledger is not None:
             lbk = ledger.select("doc_id", F.explode("bands").alias("b")).select(
                 F.col("doc_id").alias("led_id"),
@@ -221,25 +169,13 @@ class NearDupCorpusStore:
                 "doc_id",
             )
         )
-        # publish_dir's rename-aside swap (ADVICE r12): a crash mid-publish
-        # never leaves a previously successful batch's rows absent.
-        publish_dir(accepted, self.root, f"batch_id={batch_id}")
-
-    def attach(self, docs: DataFrame, checkpoint: str):
-        """Wire a streaming document source into the store."""
-        return (
-            docs.writeStream.foreachBatch(self.ingest_batch)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+        self.parts.publish(accepted, batch_id)
 
     # -- serve --------------------------------------------------------------
 
     def serve(self) -> DataFrame:
         """All accepted documents (near-dup-free corpus)."""
-        dirs = self._batch_dirs()
-        if not dirs:
-            raise FileNotFoundError(f"no accepted batches under {self.root}")
-        return self.spark.read.parquet(*dirs).drop("sh", "bands")
+        df = self.parts.read()
+        if df is None:
+            return self.spark.createDataFrame([], _EMPTY_SCHEMA)
+        return df.drop("sh", "bands")

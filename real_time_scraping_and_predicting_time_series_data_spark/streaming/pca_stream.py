@@ -15,72 +15,43 @@ is the shared `pca_from_gram` body — so the served loadings/eigenvalues
 are value-identical to the batch query, which is why the registered
 stream-serve carries the SAME DuckDB oracle.
 
-Same store contract as the sibling accumulators: per-batch dirs published
-by staging-rename (replays overwrite, folded replays drop); `compact()`
-folds by grouped DOUBLE sum (the grid fold, minus `compact_grid_store`'s
-long cast, which is for counters)."""
+Store protocol: ``store_compaction.py``; the merge law is a grouped
+DOUBLE sum (no cast: the cells are float partials, not counters)."""
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.similarity import gram_partial, pca_from_gram
-from .store_compaction import (
-    _fold,
-    is_compacted,
-    publish_dir,
-    read_store_grid,
-)
+from .store_compaction import MicroBatchStore, PartStore
 
 __all__ = ["GramStreamAccumulator"]
 
 _SCHEMA = "i int, j int, g double"
 
 
-class GramStreamAccumulator:
+class GramStreamAccumulator(MicroBatchStore):
     """Accumulates per-batch partial Gram grids and serves the exact
     batch spectral audit over all embeddings seen."""
 
     def __init__(self, spark: SparkSession, store_dir: str):
-        self.spark = spark
-        self.store_dir = store_dir
-        os.makedirs(store_dir, exist_ok=True)
-
-    def ingest_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch hook: publish this batch's unrounded partial Gram
-        (4096 rows — tiny regardless of batch size)."""
-        if is_compacted(self.store_dir, batch_id):
-            return
-        publish_dir(gram_partial(batch_df), self.store_dir, f"batch_id={batch_id}")
-
-    def attach(self, stream_df: DataFrame, checkpoint: str):
-        return (
-            stream_df.writeStream.foreachBatch(
-                lambda df, bid: self.ingest_batch(df, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    def compact(self) -> dict:
-        """Fold live grids by grouped DOUBLE sum — dim² rows afterwards,
-        regardless of batch count."""
-        return _fold(
-            self.spark,
-            self.store_dir,
+        self.parts = PartStore(
+            spark,
+            store_dir,
             _SCHEMA,
             lambda df: df.groupBy("i", "j").agg(F.sum("g").alias("g")),
         )
 
+    def batch_grid(self, batch_df: DataFrame) -> DataFrame:
+        """This batch's unrounded partial Gram (dim² rows — tiny
+        regardless of batch size)."""
+        return gram_partial(batch_df)
+
     def serve_gram(self) -> DataFrame:
         """Merged ROUNDED Gram — the batch `embedding_gram` relation over
         everything ingested."""
-        raw = read_store_grid(self.spark, self.store_dir, _SCHEMA)
-        return raw.groupBy("i", "j").agg(F.round(F.sum("g"), 6).alias("g"))
+        return self.parts.merged().select("i", "j", F.round("g", 6).alias("g"))
 
     def serve_pca(self) -> DataFrame:
         """The batch spectral audit over everything ingested — identical

@@ -82,6 +82,15 @@ class ForecastPipeline:
     # -- per-batch logic (the forecaster main loop) -------------------------
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        # The batch is the stateful gate's output: persist it so the count
+        # and the tick-store write run the gate once, not once each.
+        batch_df.persist()
+        try:
+            self._process_gated(batch_df, batch_id)
+        finally:
+            batch_df.unpersist()
+
+    def _process_gated(self, batch_df: DataFrame, batch_id: int) -> None:
         n_new = batch_df.count()
         if n_new == 0:
             return

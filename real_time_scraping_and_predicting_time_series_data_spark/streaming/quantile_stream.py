@@ -10,41 +10,27 @@ over everything ingested (count addition is associative + commutative,
 and a nearest-rank quantile is a pure function of the merged grid — no
 interpolation, no fp, so the serve is bit-identical, not just close).
 
-Idempotence follows the corpus_ingest pattern: per-batch grids land in
-``batch_id=<id>`` directories via staging-rename, so an at-least-once
-replay overwrites its own directory instead of double-counting. At 100 TB
-the per-batch state is |distinct cents in batch| rows and the serve-side
-merge touches only grids — the raw stream is never re-read. This is the
-"p99 latency / price percentile dashboard over unbounded history at
-bounded state" production shape.
-
-Deployment assumption (same as DriftStreamMonitor): the staging-rename is
-a DRIVER-LOCAL ``os.replace`` — correct only when ``store_dir`` is shared
-by driver and executors (local mode, NFS). On HDFS/S3, route the rename
-through the Hadoop ``FileSystem`` API or an atomic-commit table format.
+Store protocol (parts, replay guard, fold): ``store_compaction.py``. At
+100 TB the per-batch state is |distinct cents in batch| rows and the
+serve-side merge touches only grids — the raw stream is never re-read.
+This is the "p99 latency / price percentile dashboard over unbounded
+history at bounded state" production shape.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.stats import quantiles_from_type_grid
-from .store_compaction import (
-    compact_grid_store,
-    is_compacted,
-    publish_dir,
-    read_store_grid,
-)
+from .store_compaction import MicroBatchStore, PartStore, sum_merge
 
 __all__ = ["QuantileStreamAccumulator"]
 
 _GRID_SCHEMA = "event_type string, v bigint, cnt bigint"
 
 
-class QuantileStreamAccumulator:
+class QuantileStreamAccumulator(MicroBatchStore):
     """Accumulates (event_type, v_cents, cnt) grids per micro-batch and
     serves exact nearest-rank quantiles over all data seen."""
 
@@ -55,14 +41,11 @@ class QuantileStreamAccumulator:
         value_col: str = "value",
         group_col: str = "event_type",
     ) -> None:
-        self.spark = spark
-        self.store_dir = store_dir
         self.value_col = value_col
         self.group_col = group_col
-        os.makedirs(store_dir, exist_ok=True)
-
-    def _batch_dir(self, batch_id: int) -> str:
-        return os.path.join(self.store_dir, f"batch_id={batch_id}")
+        self.parts = PartStore(
+            spark, store_dir, _GRID_SCHEMA, sum_merge(("event_type", "v"), ("cnt",))
+        )
 
     def batch_grid(self, df: DataFrame) -> DataFrame:
         """This batch's (event_type, v, cnt) grid — reduced before
@@ -72,43 +55,10 @@ class QuantileStreamAccumulator:
             F.round(F.col(self.value_col) * 100).cast("long").alias("v"),
         ).agg(F.count("*").cast("long").alias("cnt"))
 
-    def ingest_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch hook: publish this batch's grid under its batch_id
-        (staging-rename → replays overwrite, never double-count). A replay
-        of a batch already folded by `compact()` is DROPPED — its rows are
-        inside the compacted grid and re-publishing would double-count."""
-        if is_compacted(self.store_dir, batch_id):
-            return
-        publish_dir(self.batch_grid(batch_df), self.store_dir, f"batch_id={batch_id}")
-
-    def compact(self) -> dict:
-        """Fold every published batch grid into one `compacted_upto=<id>`
-        dir (associative grouped-sum merge → served quantiles are
-        bit-identical before/after); bounds directory growth for
-        long-lived streams. See streaming/store_compaction.py."""
-        return compact_grid_store(
-            self.spark, self.store_dir, _GRID_SCHEMA, ("event_type", "v"), ("cnt",)
-        )
-
-    def attach(self, stream_df: DataFrame, checkpoint: str):
-        return (
-            stream_df.writeStream.foreachBatch(
-                lambda df, bid: self.ingest_batch(df, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-
     def serve_grid(self) -> DataFrame:
-        """The merged value grid: union of the compacted grid (if any) and
-        newer per-batch grids + one grouped sum — identical to the batch
-        grid of everything ingested. An empty store (no batch published
-        yet) serves an empty grid, not PATH_NOT_FOUND."""
-        merged = read_store_grid(self.spark, self.store_dir, _GRID_SCHEMA)
-        return merged.groupBy("event_type", "v").agg(
-            F.sum("cnt").cast("long").alias("cnt")
-        )
+        """The merged value grid — identical to the batch grid of
+        everything ingested; empty before the first batch."""
+        return self.parts.merged()
 
     def serve_quantiles(self) -> DataFrame:
         """Exact per-type nearest-rank p50/p90/p99/max over everything

@@ -10,41 +10,28 @@ This is the production shape for "alert when a weekly cycle appears in the
 ingest rate" / "has the seasonality of this metric changed since the model
 was fit" gates: per-batch state is |distinct days in batch| rows, the
 serve-side spectrum touches only the merged grid (bounded by the calendar,
-not the ticks), and the raw stream is never re-read.
-
-Deployment assumption (shared with DriftStreamMonitor, ADVICE r4): the
-staging-rename publish is driver-local ``os.replace`` — correct when
-``store_dir`` is a filesystem the driver can see (local mode, NFS); on
-HDFS/S3 route the rename through the Hadoop FileSystem API or an
-atomic-commit table format.
+not the ticks), and the raw stream is never re-read.  Store protocol:
+``store_compaction.py``.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from .store_compaction import (
-    compact_grid_store,
-    is_compacted,
-    publish_dir,
-    read_store_grid,
-)
 
 from ..operators.timeseries import (
     periodogram_from_daily,
     spectral_entropy_from_daily,
     var_es_from_daily,
 )
+from .store_compaction import MicroBatchStore, PartStore, sum_merge
 
 __all__ = ["SeasonalityStreamMonitor"]
 
 _GRID_SCHEMA = "day int, sv bigint, n bigint"
 
 
-class SeasonalityStreamMonitor:
+class SeasonalityStreamMonitor(MicroBatchStore):
     """Accumulates per-day (cents-sum, count) grids per micro-batch and
     serves the exact batch periodogram over all data seen."""
 
@@ -56,12 +43,10 @@ class SeasonalityStreamMonitor:
         ts_col: str = "ts",
         event_type: str | None = "purchase",
     ) -> None:
-        self.spark = spark
-        self.store_dir = store_dir
         self.value_col = value_col
         self.ts_col = ts_col
         self.event_type = event_type
-        os.makedirs(store_dir, exist_ok=True)
+        self.parts = PartStore(spark, store_dir, _GRID_SCHEMA, sum_merge(("day",), ("sv", "n")))
 
     def batch_grid(self, df: DataFrame) -> DataFrame:
         """This batch's (day, sv, n) grid — the exact-cents convention of
@@ -79,42 +64,11 @@ class SeasonalityStreamMonitor:
             F.count("*").cast("long").alias("n"),
         )
 
-    def ingest_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch hook: publish this batch's grid under its batch_id
-        (staging-rename → at-least-once replays overwrite, never
-        double-count)."""
-        if is_compacted(self.store_dir, batch_id):
-            return  # replay of a folded batch: rows already in the fold
-        publish_dir(self.batch_grid(batch_df), self.store_dir, f"batch_id={batch_id}")
-
-    def compact(self) -> dict:
-        """Fold every published batch grid into one `compacted_upto=<id>`
-        dir (associative sum merge -> served spectrum/VaR/entropy all
-        bit-identical); bounds directory growth for long-lived streams.
-        See streaming/store_compaction.py."""
-        return compact_grid_store(
-            self.spark, self.store_dir, _GRID_SCHEMA, ("day",), ("sv", "n")
-        )
-
-    def attach(self, stream_df: DataFrame, checkpoint: str):
-        return (
-            stream_df.writeStream.foreachBatch(
-                lambda df, bid: self.ingest_batch(df, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-
     def serve_daily(self) -> DataFrame:
-        """The merged daily-mean grid: grouped-sum merge of per-batch
-        grids, means re-derived from the EXACT merged integer sums —
-        identical doubles to the batch query's daily means."""
-        merged = read_store_grid(self.spark, self.store_dir, _GRID_SCHEMA)
-        g = merged.groupBy("day").agg(
-            F.sum("sv").cast("long").alias("sv"), F.sum("n").cast("long").alias("n")
-        )
-        return g.select(
+        """The merged daily-mean grid: means re-derived from the EXACT
+        merged integer sums — identical doubles to the batch query's daily
+        means."""
+        return self.parts.merged().select(
             "day",
             (F.col("sv").cast("double") / (F.lit(100.0) * F.col("n"))).alias("m"),
         )

@@ -32,38 +32,35 @@ whose endpoints land in different primary cells; see
   share a cell within their top-nprobe probes — measured at sf0.01:
   61.9% missed at nprobe=1, 9.5% at the default nprobe=2, 0% at 4
   (raise ``nprobe`` to trade probe cost for recall);
-- **publish**: survivors land under ``batch_id=<id>`` via the
-  crash-safe rename-aside publish (`publish_dir`) — at-least-once
-  replays overwrite their own directory, and a replay excludes its own
-  earlier attempt from the ledger probe so it reaches the same verdicts.
+- **publish**: survivors are the batch's part in the shared store
+  protocol (``store_compaction.py``) — at-least-once replays overwrite
+  their own part, and a replay excludes its own earlier attempt from the
+  ledger probe so it reaches the same verdicts; the fold is a plain
+  union (accepted rows are disjoint across batches).
 
 The served invariant (test-pinned): no two served vectors SHARING A
 PROBED CELL have cosine >= tau.  At nprobe=1 this degrades to the old
 same-primary-cell contract bit-exactly (probe set = {primary cell}).
-
-Deployment assumption (shared with the other stores): driver-local
-staging-rename — correct on a driver-visible filesystem; on HDFS/S3 use
-the Hadoop FileSystem API or an atomic-commit table format.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .store_compaction import compacted_upto, is_compacted, publish_dir
-
 from ..catalog import ensure_min_partitions
 from ..functions.vector import as_double, dot, norm
 from ..operators.similarity import ivf_probe_cells
+from .store_compaction import MicroBatchStore, PartStore
 
 __all__ = ["SemanticDedupStore"]
 
+_SCHEMA = "cell int, vec_id bigint, v array<double>, probe_cells array<int>"
 
-class SemanticDedupStore:
+
+class SemanticDedupStore(MicroBatchStore):
     """First-seen-wins semantically-deduplicated vector store over columns
     ``(vec_id, embedding)``."""
 
@@ -77,8 +74,7 @@ class SemanticDedupStore:
     ) -> None:
         if nprobe < 1:
             raise ValueError(f"nprobe must be >= 1, got {nprobe}")
-        self.spark = spark
-        self.root = os.path.join(store_dir, "accepted")
+        self.parts = PartStore(spark, os.path.join(store_dir, "accepted"), _SCHEMA)
         self.threshold = threshold
         self.nprobe = nprobe
         # (cell, c_nvec) seed centroids, normalized — kept as a plain local
@@ -88,76 +84,13 @@ class SemanticDedupStore:
         # joins derive their spread from it (r13, `_exploding_cell_join`).
         # One count over the eager-checkpointed K-row model is free.
         self.n_cells = self.centroids.count()
-        os.makedirs(self.root, exist_ok=True)
-
-    # -- store access -------------------------------------------------------
-
-    def _batch_dirs(self, exclude_batch_id: int | None = None) -> list[str]:
-        """Live parts: the newest compacted fold (if any) + batch dirs
-        newer than it (at-or-below-fold dirs are crash debris, ignored)."""
-        upto = compacted_upto(self.root)
-        out = []
-        if upto >= 0:
-            out.append(os.path.join(self.root, f"compacted_upto={upto}"))
-        for d in os.listdir(self.root):
-            if not d.startswith("batch_id="):
-                continue
-            if exclude_batch_id is not None and d == f"batch_id={exclude_batch_id}":
-                continue
-            if int(d.split("=", 1)[1]) <= upto:
-                continue
-            out.append(os.path.join(self.root, d))
-        return sorted(out)
-
-    def compact(self) -> dict:
-        """Union-fold every accepted batch dir into one
-        ``compacted_upto=<max>`` dir (accepted rows are disjoint across
-        batches by the admission anti-join); serve() and the ledger probe
-        are unchanged, folded-batch replays are dropped at ingest. Same
-        rename-then-sweep crash window as store_compaction."""
-        upto = compacted_upto(self.root)
-        live = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self.root)
-            if d.startswith("batch_id=") and int(d.split("=", 1)[1]) > upto
-        )
-        if not live:
-            return {"folded_batches": 0, "upto": upto}
-        new_upto = max(live)
-        merged = self.spark.read.parquet(*self._batch_dirs())
-        staging = os.path.join(self.root, f".staging_compacted_upto={new_upto}")
-        shutil.rmtree(staging, ignore_errors=True)
-        merged.write.mode("overwrite").parquet(staging)
-        os.rename(staging, os.path.join(self.root, f"compacted_upto={new_upto}"))
-        for d in os.listdir(self.root):
-            keep = d == f"compacted_upto={new_upto}"
-            stale = (
-                (d.startswith("batch_id=") and int(d.split("=", 1)[1]) <= new_upto)
-                or d.startswith("compacted_upto=")
-                or d.startswith(".staging")
-                or d.startswith("_staging")
-            )
-            if stale and not keep:
-                shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)
-        return {"folded_batches": len(live), "upto": new_upto}
-
-    def _ledger(self, exclude_batch_id: int | None = None) -> DataFrame | None:
-        dirs = self._batch_dirs(exclude_batch_id)
-        if not dirs:
-            return None
-        return self.spark.read.parquet(*dirs)
 
     def serve(self) -> DataFrame:
         """Everything accepted: (cell, vec_id, v, probe_cells) — ``cell``
         is the primary (storage) cell, ``probe_cells`` the stored probe
         set future ledger probes join through.  Empty before the first
         batch, never PATH_NOT_FOUND."""
-        led = self._ledger()
-        if led is None:
-            return self.spark.createDataFrame(
-                [], "cell int, vec_id bigint, v array<double>, probe_cells array<int>"
-            )
-        return led
+        return self.parts.read()
 
     # -- ingest -------------------------------------------------------------
 
@@ -192,8 +125,8 @@ class SemanticDedupStore:
         inside the band the kernel re-evaluates Spark's exact
         left-to-right fold and HALF_UP rounding) — pinned by the replay
         oracles of both serves and the store test suite."""
-        if is_compacted(self.root, batch_id):
-            return  # replay of a folded batch: its verdicts are in the fold
+        if self.parts.is_compacted(batch_id):
+            return  # skip the eager work: publish would drop the replay
         # spread first so the per-row K-dot probe fold runs at full
         # parallelism instead of on the scan's single partition (§2.1);
         # no checkpoint — `assigned` now has exactly ONE consumer (the
@@ -259,7 +192,7 @@ class SemanticDedupStore:
             .groupBy("_g")
             .applyInPandas(
                 _collapse,
-                schema="cell int, vec_id bigint, v array<double>, probe_cells array<int>",
+                schema=_SCHEMA,
             )
             .localCheckpoint(eager=True)
         )
@@ -275,8 +208,8 @@ class SemanticDedupStore:
         # the broadcast join handles with zero exchanges on the ledger
         # side; at any ledger size the scan streams.  Arithmetic
         # unchanged: Spark's round(dot, 9) >= tau.
-        led = self._ledger(exclude_batch_id=batch_id)
-        if led is not None:
+        if self.parts.live_parts(exclude_batch_id=batch_id):
+            led = self.parts.read(exclude_batch_id=batch_id)
             np_ = reps.select(
                 F.col("vec_id"), F.col("v"), F.explode("probe_cells").alias("pc")
             )
@@ -291,16 +224,4 @@ class SemanticDedupStore:
             )
             reps = reps.join(F.broadcast(hits), "vec_id", "left_anti")
 
-        # publish_dir's rename-aside swap (ADVICE r12): a crash mid-publish
-        # never leaves a previously successful batch's rows absent.
-        publish_dir(reps, self.root, f"batch_id={batch_id}")
-
-    def attach(self, stream_df: DataFrame, checkpoint: str):
-        return (
-            stream_df.writeStream.foreachBatch(
-                lambda df, bid: self.ingest_batch(df, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+        self.parts.publish(reps, batch_id)

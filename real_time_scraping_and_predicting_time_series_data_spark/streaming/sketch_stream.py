@@ -4,39 +4,25 @@ builds its own (seed, bucket, n) counter table; the served sketch is the
 sum-merge of every batch's counters, and equals the batch-built sketch of
 the full corpus exactly (counter addition is associative + commutative).
 
-Idempotence follows the corpus_ingest pattern: each batch's counters land
-in a ``batch_id=<id>`` directory via staging-rename, so an at-least-once
-replay overwrites its own directory instead of double-counting. At 100 TB
-the per-batch sketch is ≤ depth·width rows regardless of batch size — the
-merge cost never grows with history.
-
-Deployment assumption (same as DriftStreamMonitor): the staging-rename is
-a DRIVER-LOCAL ``os.replace`` — correct only when ``store_dir`` is shared
-by driver and executors (local mode, NFS). On HDFS/S3, route the rename
-through the Hadoop ``FileSystem`` API or an atomic-commit table format.
+Store protocol (parts, replay guard, fold): ``store_compaction.py``. At
+100 TB the per-batch sketch is ≤ depth·width rows regardless of batch
+size — the merge cost never grows with history.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sketch import cms_build
-from .store_compaction import (
-    compact_grid_store,
-    is_compacted,
-    publish_dir,
-    read_store_grid,
-)
+from .store_compaction import MicroBatchStore, PartStore, sum_merge
 
 __all__ = ["CmsStreamAccumulator"]
 
 _CMS_SCHEMA = "seed int, bucket bigint, n bigint"
 
 
-class CmsStreamAccumulator:
+class CmsStreamAccumulator(MicroBatchStore):
     def __init__(
         self,
         spark: SparkSession,
@@ -45,52 +31,21 @@ class CmsStreamAccumulator:
         depth: int = 4,
         width: int = 1024,
     ) -> None:
-        self.spark = spark
-        self.store_dir = store_dir
         self.text_col = text_col
         self.depth = depth
         self.width = width
-        os.makedirs(store_dir, exist_ok=True)
+        self.parts = PartStore(
+            spark, store_dir, _CMS_SCHEMA, sum_merge(("seed", "bucket"), ("n",))
+        )
 
-    def _batch_dir(self, batch_id: int) -> str:
-        return os.path.join(self.store_dir, f"batch_id={batch_id}")
-
-    def ingest_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch hook: build this batch's counter table and publish
-        it under its batch_id (staging-rename → replay overwrites, never
-        double-counts)."""
+    def batch_grid(self, batch_df: DataFrame) -> DataFrame:
+        """This batch's counter table."""
         tokens = batch_df.select(
             F.explode(F.split(F.trim(F.col(self.text_col)), r"\s+")).alias("token")
         )
-        if is_compacted(self.store_dir, batch_id):
-            return  # replay of a folded batch: counts already in the fold
-        sketch = cms_build(tokens, depth=self.depth, width=self.width)
-        publish_dir(sketch, self.store_dir, f"batch_id={batch_id}")
-
-    def attach(self, stream_df: DataFrame, checkpoint: str):
-        return (
-            stream_df.writeStream.foreachBatch(
-                lambda df, bid: self.ingest_batch(df, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    def compact(self) -> dict:
-        """Fold every published per-batch counter table into one
-        `compacted_upto=<id>` dir — CMS cells merge by cell-wise sum, the
-        same associative merge `serve` performs, so served estimates are
-        bit-identical; bounds directory growth for long-lived streams."""
-        return compact_grid_store(
-            self.spark, self.store_dir, _CMS_SCHEMA, ("seed", "bucket"), ("n",)
-        )
+        return cms_build(tokens, depth=self.depth, width=self.width)
 
     def serve(self) -> DataFrame:
-        """The merged sketch: union of the compacted counters (if any) and
-        newer per-batch counters + one grouped sum — identical to the
-        batch-built sketch of everything ingested."""
-        merged = read_store_grid(self.spark, self.store_dir, _CMS_SCHEMA)
-        return merged.groupBy("seed", "bucket").agg(
-            F.sum("n").cast("long").alias("n")
-        )
+        """The merged sketch — identical to the batch-built sketch of
+        everything ingested."""
+        return self.parts.merged()

@@ -11,74 +11,35 @@ trajectory is bit-identical to the batch query over everything ingested:
 the LLR is a BIGINT dot product of the merged cumulative counts with the
 nano-quantized constants, so there is no float state to drift.
 
-State is bounded by |distinct days| (calendar), not |orders|.  Mechanics
-follow the mergeable-grid family: per-batch grids under
-``batch_id=<id>`` via staging-rename (replays overwrite),
-`compact()` folds by grouped sum (`compact_grid_store`), empty store
-serves a typed-empty trajectory.
+State is bounded by |distinct days| (calendar), not |orders|.  Store
+protocol: ``store_compaction.py``.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.stats import sprt_day_grid, sprt_readout_from_day_grid
-from .store_compaction import (
-    compact_grid_store,
-    is_compacted,
-    publish_dir,
-    read_store_grid,
-)
+from .store_compaction import MicroBatchStore, PartStore, sum_merge
 
 __all__ = ["SprtStreamMonitor"]
 
 _GRID_SCHEMA = "day date, n bigint, u bigint"
 
 
-class SprtStreamMonitor:
+class SprtStreamMonitor(MicroBatchStore):
     """Accumulates the daily SPRT counting grid per micro-batch and serves
     the exact cumulative-LLR trajectory over all orders seen."""
 
     def __init__(self, spark: SparkSession, store_dir: str) -> None:
-        self.spark = spark
-        self.store_dir = store_dir
-        os.makedirs(store_dir, exist_ok=True)
+        self.parts = PartStore(spark, store_dir, _GRID_SCHEMA, sum_merge(("day",), ("n", "u")))
 
     def batch_grid(self, orders_df: DataFrame) -> DataFrame:
         return sprt_day_grid(orders_df)
 
-    def ingest_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if is_compacted(self.store_dir, batch_id):
-            return
-        publish_dir(self.batch_grid(batch_df), self.store_dir, f"batch_id={batch_id}")
-
-    def compact(self) -> dict:
-        """Grouped-SUM fold — count grids over disjoint batches merge
-        exactly (sum is associative + commutative)."""
-        return compact_grid_store(
-            self.spark, self.store_dir, _GRID_SCHEMA, ("day",), ("n", "u")
-        )
-
-    def attach(self, stream_df: DataFrame, checkpoint: str):
-        return (
-            stream_df.writeStream.foreachBatch(
-                lambda df, bid: self.ingest_batch(df, bid)
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-
     def serve_grid(self) -> DataFrame:
-        """Merged (day, n, u) grid: grouped sum over every live part."""
-        from pyspark.sql import functions as F
-
-        merged = read_store_grid(self.spark, self.store_dir, _GRID_SCHEMA)
-        return merged.groupBy("day").agg(
-            F.sum("n").cast("long").alias("n"), F.sum("u").cast("long").alias("u")
-        )
+        """Merged (day, n, u) grid."""
+        return self.parts.merged()
 
     def serve_trajectory(self) -> DataFrame:
         """The SPRT trajectory (day, n_orders, n_urgent, llr, decision) up

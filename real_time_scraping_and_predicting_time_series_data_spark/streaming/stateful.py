@@ -210,67 +210,6 @@ __all__.append("streaming_holt_winters")
 
 
 # ---------------------------------------------------------------------------
-# transformWithState twin (Spark 4 arbitrary-state v2 API)
-# ---------------------------------------------------------------------------
-
-try:  # Spark >= 4.0, and protobuf present (the state-protocol wire format
-    # of transformWithState's Python worker; absent in minimal installs)
-    import google.protobuf.descriptor  # noqa: F401
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class TickGateProcessor(StatefulProcessor):
-        """The same P2+P3 gate as ``_apply_gate`` on the Spark 4
-        ``transformWithStateInPandas`` API: typed per-key ValueState in the
-        store (queryable, TTL-able, schema-evolvable) instead of a single
-        opaque state tuple — the forward path for new stateful operators.
-        """
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._gate = handle.getValueState("gate", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            if self._gate.exists():
-                last_price, first_price = self._gate.get()
-            else:
-                last_price, first_price = None, None
-            pdf = _collect_batch(rows)
-            if pdf is not None:
-                out, last_price, first_price = _gate_batch(
-                    user_id, pdf, last_price, first_price
-                )
-                self._gate.update((last_price, first_price))
-                if out is not None:
-                    yield out
-            else:
-                self._gate.update((last_price, first_price))
-
-        def close(self) -> None:
-            pass
-
-    def streaming_ticks_tws(ticks: DataFrame) -> DataFrame:
-        """``streaming_ticks`` on the transformWithState v2 API — identical
-        semantics (parity test runs where the protobuf runtime exists).
-        Requires the RocksDB state store provider:
-        ``spark.sql.streaming.stateStore.providerClass =
-        org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider``.
-        """
-        return ticks.groupBy("user_id").transformWithStateInPandas(
-            TickGateProcessor(),
-            outputStructType=_OUT_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
-
-    __all__.append("streaming_ticks_tws")
-except ImportError:  # pragma: no cover - Spark 3.x / no protobuf
-    streaming_ticks_tws = None
-
-
-# ---------------------------------------------------------------------------
 # Stateful 1-D Kalman filter: O(1) state per key
 # ---------------------------------------------------------------------------
 

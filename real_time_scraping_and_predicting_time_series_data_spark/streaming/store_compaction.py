@@ -1,113 +1,96 @@
-"""Grid-store compaction — bounded directory growth for the mergeable-grid
-streaming stores (drift, quantile, and any `batch_id=<id>`-per-micro-batch
-grid family).
+"""The micro-batch store protocol shared by every ``foreachBatch`` store
+under ``streaming/`` — the one place that names, publishes, guards, folds
+and reads store parts.
 
-Every store in the family publishes one tiny (keys → counts) grid per
-micro-batch under ``batch_id=<id>`` (staging-rename, replay-overwrite).
-Serves merge ALL batch grids with a grouped sum — correct at any moment,
-but the directory count grows with stream lifetime: a 2-second trigger is
-~43k directories/day, and at object-store scale the LISTING cost (not the
-grid bytes) eventually dominates every serve. Compaction folds everything
-published so far into ONE ``compacted_upto=<max_batch_id>`` directory.
-The grouped-sum merge is associative, so the folded grid is the same
-relation the per-batch union would have produced, and every downstream
-serve statistic is unchanged — bit-identical, for the same reason the
-stores' streaming/batch parity holds.
+**Layout.** A store directory holds one part per micro-batch,
+``batch_id=<id>``, plus at most one fold, ``compacted_upto=<id>``, which
+holds every batch at or below ``<id>``. The live parts are the newest fold
+and the batch parts above it; every read sees exactly those. Stores with
+several relations (postings beside a df grid, say) keep one store
+directory per relation, each with its own parts.
 
-Correctness under the streaming failure model:
+**Publish (the rename-aside swap).** A part is written by one task to a
+``_staging_`` directory and renamed into place.
+If the part already exists (an at-least-once replay of a batch that is
+not folded yet), the old part is first renamed aside, the new one renamed
+in, and only then the aside removed — so a replay overwrites its own
+earlier attempt instead of double-counting, and no crash ever deletes a
+successful publish before its replacement is in place. A crash between
+the two renames leaves final absent and the aside present; the next
+publish of the same part (the replay) restores the aside first.
 
-- **Replay safety** — after a fold, serves read the compacted grid plus
-  only batch dirs with ``id > compacted_upto``; a late at-least-once
-  replay of an already-folded batch must be DROPPED at ingest
-  (``is_compacted``), because its rows are inside the fold already and a
-  fresh ``batch_id=<id>`` dir would double-count.
-- **Crash safety** — the new compacted dir is staged and renamed BEFORE
-  folded batch dirs are removed; a crash in the window leaves stale batch
-  dirs that serves already ignore (``id <= upto``) and the next
-  compaction sweeps. Two compacted dirs can coexist after a crash for the
-  same reason; readers take the max ``upto`` and the sweep removes the
-  older.
+**Replay guard.** After a fold, a late replay of a batch at or below the
+fold is dropped at publish: its rows are inside the fold already, and a
+fresh ``batch_id=<id>`` part would count them twice.
 
-Same deployment assumption as the stores themselves: staging-rename is a
-driver-local ``os.replace`` — correct when ``store_dir`` is shared by
-driver and executors (local mode, NFS); on HDFS/S3 route renames through
-the Hadoop ``FileSystem`` API or an atomic-commit table format.
+**Fold.** ``compact()`` reads the live parts, applies the store's merge
+law (grouped sum for count grids, grouped max for idempotent bits, plain
+union for append-only ledgers, or a store's own law), publishes the
+result as ``compacted_upto=<max live id>`` through the same swap, and
+then sweeps every other part and any staging debris. The merge law is the
+one the store's serves apply, so each serve is the same relation before
+and after the fold and the directory count stays bounded for a
+long-lived stream. A fold with no live batch only sweeps debris.
+
+**Crash windows.** The new fold is renamed in before the folded batch
+parts are removed. A crash in between leaves batch parts at or below the
+fold, which reads already ignore and the next fold sweeps; two folds can
+coexist for the same reason, and reads take the newer one.
+
+**Deployment assumption.** The renames are local ``os.rename`` calls in
+the process that runs ``foreachBatch``, correct when the store directory
+is a filesystem every Spark process shares (local mode, NFS). On HDFS/S3 the renames would have to
+go through the Hadoop ``FileSystem`` API or an atomic-commit table format
+(Delta/Iceberg). The merge laws themselves are storage-agnostic.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 import shutil
-from functools import reduce
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = [
-    "compacted_upto",
-    "is_compacted",
-    "publish_dir",
-    "read_store_grid",
-    "compact_grid_store",
-    "compact_union_store",
-]
+__all__ = ["MicroBatchStore", "PartStore", "max_merge", "publish_dir", "sum_merge"]
 
 _BATCH_RE = re.compile(r"^batch_id=(\d+)$")
 _COMPACT_RE = re.compile(r"^compacted_upto=(\d+)$")
 
-
-def _batch_ids(store_dir: str) -> list[int]:
-    out = []
-    for name in os.listdir(store_dir):
-        m = _BATCH_RE.match(name)
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
+Merge = Callable[[DataFrame], DataFrame]
 
 
-def compacted_upto(store_dir: str) -> int:
-    """Highest batch_id folded into a compacted dir; -1 if never compacted.
-    Multiple compacted dirs (crash window) resolve to the max."""
-    if not os.path.isdir(store_dir):
-        return -1
-    upto = -1
-    for name in os.listdir(store_dir):
-        m = _COMPACT_RE.match(name)
-        if m:
-            upto = max(upto, int(m.group(1)))
-    return upto
+def sum_merge(keys: Sequence[str], cols: Sequence[str]) -> Merge:
+    """Count-grid merge law: grouped BIGINT sum — associative and
+    commutative, exact over batches that partition the stream."""
+    return lambda df: df.groupBy(*keys).agg(
+        *[F.sum(c).cast("long").alias(c) for c in cols]
+    )
 
 
-def is_compacted(store_dir: str, batch_id: int) -> bool:
-    """True when ``batch_id``'s rows are already inside the compacted grid —
-    an at-least-once replay of it must be dropped at ingest."""
-    return batch_id <= compacted_upto(store_dir)
+def max_merge(keys: Sequence[str], cols: Sequence[str]) -> Merge:
+    """Bit/watermark merge law: grouped BIGINT max — also idempotent, so
+    it tolerates rows duplicated across parts."""
+    return lambda df: df.groupBy(*keys).agg(
+        *[F.max(c).cast("long").alias(c) for c in cols]
+    )
 
 
-def publish_dir(df: DataFrame, store_dir: str, dirname: str) -> None:
-    """Stage + rename ``df`` (coalesced to one file) as ``store_dir/dirname``
-    — the idempotent publish every store in the family uses.
-
-    Crash-safe swap (ADVICE r12): the old ``rmtree(final); rename(staging,
-    final)`` order had a window where a crash deleted a previously
-    SUCCESSFUL publish and left nothing — recovery then depended entirely
-    on the at-least-once replay re-delivering that batch.  Now the old dir
-    is renamed ASIDE (never deleted before its replacement is in place),
-    the new dir renamed in, and only then the aside removed.  The aside
-    name starts with ``_staging_`` so serves' listings already ignore it
-    and the compaction sweep cleans any debris.  If a crash lands between
-    the two renames, the next publish of the same dirname (the replay
-    path) self-heals by restoring the aside first."""
+def publish_dir(
+    df: DataFrame, store_dir: str, dirname: str, partition_by: Sequence[str] = ()
+) -> None:
+    """Write ``df`` (coalesced to one task) as ``store_dir/dirname`` by the
+    rename-aside swap described in the module docstring."""
     final = os.path.join(store_dir, dirname)
     staging = os.path.join(store_dir, f"_staging_{dirname.replace('=', '_')}")
     aside = staging + ".prev"
-    # Self-heal a crash between the two renames below: the previous
-    # publish's content is in the aside and final is absent — restore it
-    # before (re)staging, so the swap below again never leaves a gap.
     if os.path.isdir(aside) and not os.path.exists(final):
-        os.rename(aside, final)
-    df.coalesce(1).write.mode("overwrite").parquet(staging)
+        os.rename(aside, final)  # self-heal a crash between the renames
+    writer = df.coalesce(1).write.mode("overwrite")
+    (writer.partitionBy(*partition_by) if partition_by else writer).parquet(staging)
     shutil.rmtree(aside, ignore_errors=True)
     if os.path.exists(final):
         os.rename(final, aside)
@@ -115,123 +98,137 @@ def publish_dir(df: DataFrame, store_dir: str, dirname: str) -> None:
     shutil.rmtree(aside, ignore_errors=True)
 
 
-def _live_parts(store_dir: str) -> list[str]:
-    """The directories a serve should read: the newest compacted grid (if
-    any) + batch dirs NEWER than it. Stale dirs (older compacted grids,
-    batch dirs at or below the fold) are excluded — they are crash debris."""
-    upto = compacted_upto(store_dir)
-    parts = []
-    if upto >= 0:
-        parts.append(os.path.join(store_dir, f"compacted_upto={upto}"))
-    parts.extend(
-        os.path.join(store_dir, f"batch_id={i}")
-        for i in _batch_ids(store_dir)
-        if i > upto
-    )
-    return parts
+class PartStore:
+    """One store directory: its parts, its read schema and its merge law.
 
+    ``schema`` types every read and the empty relation served before the
+    first publish; ``None`` (the ledger stores, which carry their input
+    columns through) reads the parts' own schema and gives ``None`` while
+    nothing is published. ``merge`` is the law that folds parts (``None``:
+    plain union). ``partition_by`` keeps parts and fold hive-partitioned
+    on those columns."""
 
-def read_store_grid(spark: SparkSession, store_dir: str, schema: str) -> DataFrame:
-    """Union of every live part's rows (NOT aggregated — callers own the
-    grouped-sum merge, exactly as before compaction existed). Typed-empty
-    when nothing has published."""
-    parts = _live_parts(store_dir) if os.path.isdir(store_dir) else []
-    if not parts:
-        return spark.createDataFrame([], schema)
-    dfs = [spark.read.schema(schema).parquet(p) for p in parts]
-    return reduce(DataFrame.unionByName, dfs)
+    def __init__(
+        self,
+        spark: SparkSession,
+        root: str,
+        schema: str | None = None,
+        merge: Merge | None = None,
+        partition_by: Sequence[str] = (),
+    ) -> None:
+        self.spark = spark
+        self.root = root
+        self.schema = schema
+        self.merge = merge or (lambda df: df)
+        self.partition_by = tuple(partition_by)
+        os.makedirs(root, exist_ok=True)
 
-
-def _sweep(store_dir: str, keep: str) -> None:
-    """Remove every batch/compacted/staging dir except ``keep`` — safe
-    post-rename (those rows are in the fold) and for crash debris (serves
-    already ignore ids at or below the fold)."""
-    for name in os.listdir(store_dir):
-        if name == keep:
-            continue
-        if _BATCH_RE.match(name) or _COMPACT_RE.match(name) or name.startswith("_staging_"):
-            shutil.rmtree(os.path.join(store_dir, name), ignore_errors=True)
-
-
-def _fold(spark: SparkSession, store_dir: str, schema: str, transform) -> dict:
-    """Shared fold core: merge live parts via ``transform``, publish as
-    ``compacted_upto=<max live id>``, sweep everything else. A no-op fold
-    (no live batches) still sweeps crash debris."""
-    upto = compacted_upto(store_dir)
-    live_ids = [i for i in _batch_ids(store_dir) if i > upto]
-    dirs_before = len(os.listdir(store_dir)) if os.path.isdir(store_dir) else 0
-    if not live_ids:
-        if upto >= 0 or dirs_before:
-            _sweep(store_dir, f"compacted_upto={upto}")
-        return {
-            "folded_batches": 0,
-            "upto": upto,
-            "dirs_before": dirs_before,
-            "dirs_after": len(os.listdir(store_dir)),
-        }
-    new_upto = max(live_ids)
-    merged = transform(read_store_grid(spark, store_dir, schema))
-    publish_dir(merged, store_dir, f"compacted_upto={new_upto}")
-    _sweep(store_dir, f"compacted_upto={new_upto}")
-    return {
-        "folded_batches": len(live_ids),
-        "upto": new_upto,
-        "dirs_before": dirs_before,
-        "dirs_after": len(os.listdir(store_dir)),
-    }
-
-
-def compact_grid_store(
-    spark: SparkSession,
-    store_dir: str,
-    schema: str,
-    key_cols: tuple[str, ...],
-    sum_cols: tuple[str, ...],
-) -> dict:
-    """Fold all live parts into one ``compacted_upto=<max_id>`` grid by the
-    associative grouped-sum merge, then sweep folded batch dirs, older
-    compacted dirs, and crash debris. Returns ``{"folded_batches", "upto",
-    "dirs_before", "dirs_after"}``."""
-    return _fold(
-        spark,
-        store_dir,
-        schema,
-        lambda df: df.groupBy(*key_cols).agg(
-            *[F.sum(c).cast("long").alias(c) for c in sum_cols]
-        ),
-    )
-
-
-def compact_union_store(
-    spark: SparkSession,
-    store_dir: str,
-    schema: str,
-) -> dict:
-    """Fold an APPEND-ONLY store (rows disjoint across batch dirs by the
-    replay-overwrite publish contract — e.g. postings, per-doc bases) by
-    pure union, no aggregation: the fold is the same multiset the per-batch
-    union served, just in one directory. Same rename-then-sweep crash
-    window and `is_compacted` replay contract as `compact_grid_store`."""
-    return _fold(spark, store_dir, schema, lambda df: df)
-
-
-def compact_max_store(
-    spark: SparkSession,
-    store_dir: str,
-    schema: str,
-    key_cols: tuple[str, ...],
-    max_cols: tuple[str, ...],
-) -> dict:
-    """Fold all live parts by a grouped-MAX merge — for stores whose
-    per-key state is an idempotent bit/watermark (per-user conversion
-    bits, per-register HLL maxima) rather than an additive count.  Max is
-    associative, commutative AND idempotent, so this fold tolerates even
-    row-level duplication across parts, a strictly weaker requirement
-    than the sum fold's disjointness contract."""
-
-    def merge(df: DataFrame) -> DataFrame:
-        return df.groupBy(*key_cols).agg(
-            *[F.max(c).cast("long").alias(c) for c in max_cols]
+    def _ids(self, pattern: re.Pattern) -> list[int]:
+        return sorted(
+            int(m.group(1)) for m in map(pattern.match, os.listdir(self.root)) if m
         )
 
-    return _fold(spark, store_dir, schema, merge)
+    def compacted_upto(self) -> int:
+        """Highest batch id inside a fold; -1 before the first fold."""
+        return max(self._ids(_COMPACT_RE), default=-1)
+
+    def is_compacted(self, batch_id: int) -> bool:
+        """True when ``batch_id``'s rows are inside the fold already."""
+        return batch_id <= self.compacted_upto()
+
+    def live_parts(self, exclude_batch_id: int | None = None) -> list[str]:
+        """The newest fold plus the batch parts above it; a ledger probe
+        passes its own ``batch_id`` so a replay does not see its first
+        attempt."""
+        upto = self.compacted_upto()
+        names = [f"compacted_upto={upto}"] if upto >= 0 else []
+        names += [
+            f"batch_id={i}"
+            for i in self._ids(_BATCH_RE)
+            if i > upto and i != exclude_batch_id
+        ]
+        return [os.path.join(self.root, n) for n in names]
+
+    def publish(self, df: DataFrame, batch_id: int) -> None:
+        """Publish ``df`` as this batch's part; a replay of a folded batch
+        is dropped."""
+        if self.is_compacted(batch_id):
+            return
+        publish_dir(df, self.root, f"batch_id={batch_id}", self.partition_by)
+
+    def _reader(self):
+        r = self.spark.read
+        return r if self.schema is None else r.schema(self.schema)
+
+    def read(self, exclude_batch_id: int | None = None) -> DataFrame | None:
+        """The union of the live parts, not merged."""
+        parts = self.live_parts(exclude_batch_id)
+        if not parts:
+            return None if self.schema is None else self.spark.createDataFrame([], self.schema)
+        if not self.partition_by:
+            return self._reader().parquet(*parts)
+        # a partitioned part is its own table root: read each, then union
+        return functools.reduce(
+            DataFrame.unionByName,
+            [self._reader().option("basePath", p).parquet(p) for p in parts],
+        )
+
+    def merged(self) -> DataFrame | None:
+        """The live parts under the merge law."""
+        df = self.read()
+        return df if df is None else self.merge(df)
+
+    def compact(self) -> dict:
+        """Fold the live parts into ``compacted_upto=<max live id>`` and
+        sweep everything else."""
+        upto = self.compacted_upto()
+        live = [i for i in self._ids(_BATCH_RE) if i > upto]
+        dirs_before = len(os.listdir(self.root))
+        if live:
+            merged = self.merged()
+            upto = live[-1]
+            publish_dir(merged, self.root, f"compacted_upto={upto}", self.partition_by)
+        keep = f"compacted_upto={upto}"
+        for name in os.listdir(self.root):
+            stale = _BATCH_RE.match(name) or _COMPACT_RE.match(name) or name.startswith("_staging_")
+            if stale and name != keep:
+                shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
+        return {
+            "folded_batches": len(live),
+            "upto": upto,
+            "dirs_before": dirs_before,
+            "dirs_after": len(os.listdir(self.root)),
+        }
+
+
+class MicroBatchStore:
+    """Base of the ``foreachBatch`` stores. A store sets ``self.parts`` —
+    one ``PartStore``, or a dict of them for a store with several
+    relations — and either defines ``batch_grid`` (the relation one batch
+    publishes) or overrides ``ingest_batch``."""
+
+    parts: PartStore | dict[str, PartStore]
+
+    def batch_grid(self, batch_df: DataFrame) -> DataFrame:
+        raise NotImplementedError
+
+    def ingest_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        """foreachBatch hook: publish this batch's relation."""
+        self.parts.publish(self.batch_grid(batch_df), batch_id)
+
+    def attach(self, stream_df: DataFrame, checkpoint: str):
+        """Wire a streaming DataFrame into the store and start the query
+        (``availableNow``)."""
+        return (
+            stream_df.writeStream.foreachBatch(self.ingest_batch)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    def compact(self) -> dict:
+        """Fold every part store (see the module docstring); a store with
+        several relations reports one fold per relation."""
+        if isinstance(self.parts, dict):
+            return {name: p.compact() for name, p in self.parts.items()}
+        return self.parts.compact()

@@ -15,10 +15,10 @@ schedule over the accepted set.  Decomposition:
   projects ONLY the canonical-URL column; at 100 TB the accepted store
   is bucketed on ``canonical_url`` so the anti join is zero-shuffle on
   the ledger side and the probe side is one micro-batch;
-- **idempotent append**: accepted rows land under ``batch_id=<id>`` via
-  staging-rename (a replayed batch overwrites its own earlier attempt
-  and excludes its own directory from the ledger probe), and
-  ``compact()`` folds batch directories by pure union — accepted rows
+- **idempotent append**: accepted rows are the batch's part in the
+  shared store protocol (``store_compaction.py``): a replayed batch
+  overwrites its own earlier attempt and excludes its own part from the
+  ledger probe, and ``compact()`` folds by plain union — accepted rows
   are disjoint across batches by the anti-join.
 
 Equivalence contract (pinned in tests/test_url_frontier.py): when batch
@@ -36,76 +36,25 @@ arrival, stated here rather than hidden.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .store_compaction import compacted_upto, is_compacted, publish_dir
+from .store_compaction import MicroBatchStore, PartStore
 
 __all__ = ["UrlFrontierStore"]
 
+_EMPTY_SCHEMA = "doc_id bigint, canonical_url string, host string, reg_domain string"
 
-class UrlFrontierStore:
+
+class UrlFrontierStore(MicroBatchStore):
     """First-seen-wins canonical-URL ledger over columns
     ``(doc_id, url)``; accepted rows carry
     ``(doc_id, canonical_url, reg_domain, host)``."""
 
     def __init__(self, spark: SparkSession, store_dir: str) -> None:
         self.spark = spark
-        self.root = os.path.join(store_dir, "accepted")
-        os.makedirs(self.root, exist_ok=True)
-
-    def _batch_dirs(self, exclude_batch_id: int | None = None) -> list[str]:
-        upto = compacted_upto(self.root)
-        out = []
-        if upto >= 0:
-            out.append(os.path.join(self.root, f"compacted_upto={upto}"))
-        for d in os.listdir(self.root):
-            if not d.startswith("batch_id="):
-                continue
-            if exclude_batch_id is not None and d == f"batch_id={exclude_batch_id}":
-                continue
-            if int(d.split("=", 1)[1]) <= upto:
-                continue
-            out.append(os.path.join(self.root, d))
-        return sorted(out)
-
-    def _ledger_urls(self, exclude_batch_id: int | None = None) -> DataFrame | None:
-        dirs = self._batch_dirs(exclude_batch_id)
-        if not dirs:
-            return None
-        # Canonical-URL-only projection: one column of the store is read.
-        return self.spark.read.parquet(*dirs).select("canonical_url")
-
-    def compact(self) -> dict:
-        """Fold accepted ``batch_id=<i>`` dirs into ``compacted_upto=<max>``
-        — a pure union (rows disjoint by the ledger anti-join)."""
-        upto = compacted_upto(self.root)
-        live = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self.root)
-            if d.startswith("batch_id=") and int(d.split("=", 1)[1]) > upto
-        )
-        if not live:
-            return {"folded_batches": 0, "upto": upto}
-        new_upto = max(live)
-        merged = self.spark.read.parquet(*self._batch_dirs())
-        staging = os.path.join(self.root, f".staging_compacted_upto={new_upto}")
-        shutil.rmtree(staging, ignore_errors=True)
-        merged.write.mode("overwrite").parquet(staging)
-        os.rename(staging, os.path.join(self.root, f"compacted_upto={new_upto}"))
-        for d in os.listdir(self.root):
-            keep = d == f"compacted_upto={new_upto}"
-            stale = (
-                (d.startswith("batch_id=") and int(d.split("=", 1)[1]) <= new_upto)
-                or d.startswith("compacted_upto=")
-                or d.startswith(".staging")
-                or d.startswith("_staging")
-            )
-            if stale and not keep:
-                shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)
-        return {"folded_batches": len(live), "upto": new_upto}
+        self.parts = PartStore(spark, os.path.join(store_dir, "accepted"))
 
     # -- ingest ---------------------------------------------------------
 
@@ -114,8 +63,6 @@ class UrlFrontierStore:
         ``batch_df`` carries raw ``(doc_id, url)``."""
         from ..operators.corpus import canonical_url, with_registrable_domain  # noqa: PLC0415
 
-        if is_compacted(self.root, batch_id):
-            return  # replay of a folded batch: its verdicts are in the fold
         canon, host = canonical_url(F.col("url"))
         c = batch_df.select(
             "doc_id", canon.alias("canonical_url"), host.alias("host")
@@ -127,31 +74,20 @@ class UrlFrontierStore:
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        ledger = self._ledger_urls(exclude_batch_id=batch_id)
+        ledger = self.parts.read(exclude_batch_id=batch_id)
         if ledger is not None:
-            survivors = survivors.join(ledger, "canonical_url", "left_anti")
-        # publish_dir's rename-aside swap (ADVICE r12): a crash mid-publish
-        # never leaves a previously successful batch's rows absent.
-        publish_dir(survivors, self.root, f"batch_id={batch_id}")
-
-    def attach(self, urls: DataFrame, checkpoint: str):
-        """Wire a streaming (doc_id, url) source into the store."""
-        return (
-            urls.writeStream.foreachBatch(self.ingest_batch)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+            # Canonical-URL-only projection: one column of the store is read.
+            survivors = survivors.join(
+                ledger.select("canonical_url"), "canonical_url", "left_anti"
+            )
+        self.parts.publish(survivors, batch_id)
 
     # -- serve ----------------------------------------------------------
 
     def accepted(self) -> DataFrame:
         """All admitted frontier rows (one per canonical URL)."""
-        dirs = self._batch_dirs()
-        if not dirs:
-            raise FileNotFoundError(f"no accepted batches under {self.root}")
-        return self.spark.read.parquet(*dirs)
+        df = self.parts.read()
+        return df if df is not None else self.spark.createDataFrame([], _EMPTY_SCHEMA)
 
     def serve_frontier(self, docs: DataFrame) -> DataFrame:
         """The politeness schedule over the accepted set — the SAME

@@ -8,7 +8,6 @@ import datetime as dt
 import json
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from real_time_scraping_and_predicting_time_series_data_spark.operators.timeseries import (
@@ -215,41 +214,6 @@ def test_forecast_pipeline_end_to_end(spark, tmp_path):
     assert counts["actual_prices"] == 60
     assert counts["rmse_history"] >= 1
     assert (tmp_path / "export" / "forecast_comparison").exists()
-
-
-def test_transform_with_state_twin_matches_v1(spark, tmp_path):
-    """The Spark 4 transformWithStateInPandas gate must produce exactly the
-    v1 applyInPandasWithState output (and thus the batch composition) on the
-    same micro-batched input, including state carried across batches."""
-    from real_time_scraping_and_predicting_time_series_data_spark.streaming.stateful import (
-        streaming_ticks_tws,
-    )
-
-    if streaming_ticks_tws is None:
-        pytest.skip("transformWithState requires Spark >= 4.0 + protobuf runtime")
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        got = _run_stream(spark, tmp_path, streaming_ticks_tws, "gate_tws").collect()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    got_map = {r.event_id: (r.value, round(r.variation, 12)) for r in got}
-    assert set(got_map) == {0, 2, 3, 5, 7}
-
-    all_rows = [
-        (eid, BASE + dt.timedelta(seconds=sec), uid, val)
-        for eid, sec, uid, val in BATCH_1 + BATCH_2
-    ]
-    batch_df = spark.createDataFrame(all_rows, TICK_SCHEMA)
-    want = anchored_variation(change_dedup(batch_df)).collect()
-    want_map = {r.event_id: (r.value, round(r.variation, 12)) for r in want}
-    assert got_map == want_map
 
 
 def test_update_and_complete_output_modes(spark, tmp_path):

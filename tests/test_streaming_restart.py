@@ -14,6 +14,7 @@ from real_time_scraping_and_predicting_time_series_data_spark.streaming.stateful
     streaming_ticks,
 )
 
+from tests.test_store_contract import STORES
 from tests.test_streaming import _write_poll_file
 
 
@@ -291,36 +292,13 @@ def test_drift_store_survives_restart(spark, tmp_path):
     assert got == want
 
 
-def test_all_grid_stores_serve_before_first_batch(spark, tmp_path):
-    """A dashboard may poll serve() before ingest starts: every grid
-    store must serve an empty/degenerate result, never PATH_NOT_FOUND."""
-    from real_time_scraping_and_predicting_time_series_data_spark.streaming.dfindex_stream import (
-        NgramDfStreamIndex,
-    )
-    from real_time_scraping_and_predicting_time_series_data_spark.streaming.drift_stream import (
-        DriftStreamMonitor,
-    )
-    from real_time_scraping_and_predicting_time_series_data_spark.streaming.quantile_stream import (
-        QuantileStreamAccumulator,
-    )
-    from real_time_scraping_and_predicting_time_series_data_spark.streaming.seasonality_stream import (
-        SeasonalityStreamMonitor,
-    )
-
-    drift = DriftStreamMonitor(spark, str(tmp_path / "d"))
-    assert drift.serve_ks().count() == 0
-    assert drift.serve_mann_whitney().count() == 0
-    drift.serve_psi().collect()  # smoothing-defined; must not raise
-    drift.serve_jsd().collect()
-
-    quant = QuantileStreamAccumulator(spark, str(tmp_path / "q"))
-    assert quant.serve_quantiles().count() == 0
-
-    season = SeasonalityStreamMonitor(spark, str(tmp_path / "s"))
-    assert season.serve_periodogram().count() == 0
-    assert season.serve_var_es().count() == 0
-    season.serve_spectral_entropy().collect()  # global agg: 1 null row ok
-
-    dfx = NgramDfStreamIndex(spark, str(tmp_path / "n"))
-    assert dfx.serve_df().count() == 0
-    assert dfx.serve_boilerplate().count() == 0
+@pytest.mark.parametrize("case", STORES, ids=[c.name for c in STORES])
+def test_all_grid_stores_serve_before_first_batch(spark, tmp_path, case):
+    """A dashboard may poll a serve before ingest starts: every store must
+    serve a typed-empty relation (a global aggregate: at most one row),
+    never PATH_NOT_FOUND."""
+    store = case.make(spark, str(tmp_path / "store"))
+    for name in case.serves:
+        df = case.serve(store, name)
+        assert "void" not in df.schema.simpleString(), name
+        assert len(df.collect()) <= (1 if name in case.global_aggs else 0), name
