@@ -3862,7 +3862,8 @@ def roc_auc_from_grid(g):
     """(n_pos, n_neg, auc_num2, auc) from a (pc, pos, neg) score grid —
     tie-aware Mann-Whitney AUC with a BIGINT numerator (2U).  Shared by
     `ml_roc_auc` and any streaming model-quality serve over the same
-    mergeable grid."""
+    mergeable grid.  A grid with no positives or no negatives has no AUC:
+    `auc` is null there (`try_divide`), not an ANSI divide-by-zero."""
     # pc = floor(1e6·p + 0.5) ∈ [0, 1e6] by construction → closed-form
     # bucketing, no percentile bounds job
     c = grid_cumsum(g, ["neg"], order_col="pc", value_range=(0, 1000000))
@@ -3879,11 +3880,13 @@ def roc_auc_from_grid(g):
         .cast("long")
         .alias("auc_num2"),
         canon(
-            F.sum(
-                F.col("pos")
-                * (2.0 * (F.col("cum_neg") - F.col("neg")) + F.col("neg"))
+            F.try_divide(
+                F.sum(
+                    F.col("pos")
+                    * (2.0 * (F.col("cum_neg") - F.col("neg")) + F.col("neg"))
+                ),
+                2.0 * F.col("n_pos") * F.col("n_neg"),
             )
-            / (2.0 * F.col("n_pos") * F.col("n_neg"))
         ).alias("auc"),
     )
 
@@ -3938,7 +3941,8 @@ def average_precision_from_grid(g):
     is 0·precision and they leave every cumulative count unchanged) —
     the same degenerate-grid guard as ks/mw/jsd_from_value_grid.
     Grids built by groupBy counts never contain them; hand-built or
-    merged-then-differenced grids can."""
+    merged-then-differenced grids can.  A grid with no positives has no
+    AP: `pr_auc` is null there (`try_divide`)."""
     g = g.filter((F.col("pos") + F.col("neg")) > 0).withColumn(
         "npc", -F.col("pc")
     )
@@ -3954,7 +3958,7 @@ def average_precision_from_grid(g):
     return j.groupBy("n_pos", "n_neg").agg(
         canon(
             F.sum(
-                (F.col("pos") / F.col("n_pos").cast("double"))
+                F.try_divide(F.col("pos"), F.col("n_pos").cast("double"))
                 * (
                     F.col("cum_pos")
                     / (F.col("cum_pos") + F.col("cum_neg")).cast("double")

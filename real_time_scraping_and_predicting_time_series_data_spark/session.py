@@ -8,7 +8,8 @@ logical plans survive a 1000-executor / 100 TB deployment:
 - auto broadcast threshold left at Spark default so small dims (region,
   nation, supplier at low SF; genuinely small dims at full scale) broadcast;
 - Arrow enabled for the few pandas-UDF paths (model inference, stateful ops);
-- shuffle partitions sized for the local harness but overridable via env.
+- shuffle partitions sized for the local harness but overridable via env;
+- streams start through ``start_stream``: one state partition per core.
 """
 
 from __future__ import annotations
@@ -16,8 +17,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-__all__ = ["get_spark", "release_persisted_rdds", "SHUFFLE_PARTITIONS"]
+__all__ = ["get_spark", "release_persisted_rdds", "start_stream", "SHUFFLE_PARTITIONS"]
 
 SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
@@ -47,6 +49,33 @@ def release_persisted_rdds(spark: SparkSession) -> int:
     except Exception:
         pass
     return n
+
+
+def start_stream(writer: DataStreamWriter) -> StreamingQuery:
+    """Start a streaming query with ``spark.sql.shuffle.partitions`` set to
+    ``defaultParallelism`` — how every engine stream starts.
+
+    With the batch default (``SHUFFLE_PARTITIONS``) every stateful operator
+    would hold that many state-store partitions, and each one loads and
+    commits a state version and runs a task every micro-batch, keyed or
+    not. AQE does not coalesce them. One partition per core keeps every
+    core busy and none idle.
+
+    Only ``start()`` sees the value: it clones the session for the stream,
+    so batch queries on the session keep theirs. Spark records the stream's
+    count in the checkpoint's offset log at batch 0 and restores it on
+    restart, so a query restarted from an existing checkpoint keeps the
+    count it was first started with. The swap is not atomic: a query that
+    another thread plans on the same session during ``start()`` sees the
+    stream's count."""
+    spark = writer._spark
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+    try:
+        return writer.start()
+    finally:
+        spark.conf.set(key, old)
 
 
 def get_spark(

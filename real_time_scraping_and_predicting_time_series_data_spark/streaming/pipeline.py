@@ -30,13 +30,22 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..ml.forecast import LinearForecaster, lag_features
 from ..operators.asof import asof_join
 from ..operators.timeseries import tail_window
-from .stateful import streaming_ticks
+from ..session import start_stream
+from .stateful import _OUT_SCHEMA, streaming_ticks
 
 __all__ = ["ForecastPipeline"]
+
+# The columns each store is written with; reads name them, so a read lists
+# files but runs no schema-inference job.
+_LEDGER_SCHEMA = (
+    "user_id bigint, made_at timestamp, target_ts timestamp, step int, forecasted_value double"
+)
+_RMSE_SCHEMA = "user_id bigint, step int, rmse double, n_scored bigint, batch_id int"
 
 
 class ForecastPipeline:
@@ -64,20 +73,20 @@ class ForecastPipeline:
 
     # -- store accessors ----------------------------------------------------
 
-    def _read_or_none(self, path: str) -> DataFrame | None:
-        try:
-            return self.spark.read.parquet(path)
-        except Exception:  # noqa: BLE001 — store not created yet
+    def _read_or_none(self, path: str, schema: StructType | str) -> DataFrame | None:
+        """The store at ``path``, or ``None`` before its first write."""
+        if not os.path.isdir(path):
             return None
+        return self.spark.read.schema(schema).parquet(path)
 
     def ticks(self) -> DataFrame | None:
-        return self._read_or_none(self.ticks_path)
+        return self._read_or_none(self.ticks_path, _OUT_SCHEMA)
 
     def ledger(self) -> DataFrame | None:
-        return self._read_or_none(self.ledger_path)
+        return self._read_or_none(self.ledger_path, _LEDGER_SCHEMA)
 
     def rmse_history(self) -> DataFrame | None:
-        return self._read_or_none(self.rmse_path)
+        return self._read_or_none(self.rmse_path, _RMSE_SCHEMA)
 
     # -- per-batch logic (the forecaster main loop) -------------------------
 
@@ -181,7 +190,7 @@ class ForecastPipeline:
             .option("checkpointLocation", checkpoint or os.path.join(self.work_dir, "ckpt"))
         )
         writer = writer.trigger(**(trigger or {"availableNow": True}))
-        self.query = writer.start()
+        self.query = start_stream(writer)
         return self.query
 
     def stop_and_export(self, export_dir: str) -> dict[str, int]:

@@ -55,6 +55,8 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import start_stream
+
 __all__ = ["MicroBatchStore", "PartStore", "max_merge", "publish_dir", "sum_merge"]
 
 _BATCH_RE = re.compile(r"^batch_id=(\d+)$")
@@ -219,11 +221,10 @@ class MicroBatchStore:
     def attach(self, stream_df: DataFrame, checkpoint: str):
         """Wire a streaming DataFrame into the store and start the query
         (``availableNow``)."""
-        return (
+        return start_stream(
             stream_df.writeStream.foreachBatch(self.ingest_batch)
             .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
-            .start()
         )
 
     def compact(self) -> dict:

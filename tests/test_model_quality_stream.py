@@ -110,3 +110,17 @@ def test_replay_restart_and_compaction(spark, tmp_path):
     assert _served(mon) == full
     mon.ingest_batch(part(0), 0)
     assert _served(mon) == full
+
+
+def test_one_class_batch_serves_null_auc(spark, tmp_path):
+    """A store that has seen only negatives (`src0`) has no ROC AUC and no
+    AP: the serves return null, not an ANSI divide-by-zero."""
+    w = _frozen_w(spark)
+    docs = load_table(spark, SF, "documents")
+    mon = ModelQualityStreamMonitor(spark, str(tmp_path / "store"), *w)
+    mon.ingest_batch(docs.filter(F.col("source") == "src0"), 0)
+    (row,) = mon.serve_roc_auc().collect()
+    assert row.n_pos == 0 and row.n_neg > 0
+    assert row.auc_num2 == 0 and row.auc is None
+    (pr,) = mon.serve_pr_auc().collect()
+    assert pr.n_pos == 0 and pr.pr_auc is None and pr.best_f1 == 0.0

@@ -216,6 +216,35 @@ def test_forecast_pipeline_end_to_end(spark, tmp_path):
     assert (tmp_path / "export" / "forecast_comparison").exists()
 
 
+def state_partitions(spark, ckpt: str) -> int:
+    """State-store partitions of the checkpoint's one stateful operator."""
+    (op,) = spark.read.format("state-metadata").load(ckpt).collect()
+    return op.numPartitions
+
+
+def test_pipeline_state_spans_one_partition_per_core(spark, tmp_path):
+    """The pipeline's stream starts with one shuffle (so state) partition
+    per core whatever the session's batch setting, and the session keeps
+    its own setting."""
+    drop = str(tmp_path / "drop")
+    _write_poll_file(drop, "poll_000.json", BATCH_1)
+    _write_poll_file(drop, "poll_001.json", BATCH_2)
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        pipe = ForecastPipeline(spark, str(tmp_path / "work"))
+        q = pipe.start(file_tick_stream(spark, drop))
+        assert spark.conf.get(key) == "7"
+        q.awaitTermination(300)
+    finally:
+        spark.conf.set(key, old)
+    cores = spark.sparkContext.defaultParallelism
+    assert cores != 7
+    assert state_partitions(spark, str(tmp_path / "work" / "ckpt")) == cores
+    assert pipe.ticks().count() == 5  # the gate kept {0, 2, 3, 5, 7}
+
+
 def test_update_and_complete_output_modes(spark, tmp_path):
     """Running per-key aggregation through the two non-append output modes:
     update emits only groups changed by each batch (so a key touched twice

@@ -10,12 +10,13 @@ import pytest
 from real_time_scraping_and_predicting_time_series_data_spark.sources.streams import (
     file_tick_stream,
 )
+from real_time_scraping_and_predicting_time_series_data_spark.streaming import pipeline
 from real_time_scraping_and_predicting_time_series_data_spark.streaming.stateful import (
     streaming_ticks,
 )
 
 from tests.test_store_contract import STORES
-from tests.test_streaming import _write_poll_file
+from tests.test_streaming import _write_poll_file, state_partitions
 
 
 def _run_to_parquet(spark, drop, ckpt, out):
@@ -54,6 +55,60 @@ def test_state_survives_restart(spark, tmp_path):
         "variation re-anchored: first_price state lost on restart"
     )
     assert set(second) == {0, 1, 3}  # committed batch-1 output not duplicated
+
+
+def _run_pipeline(spark, work: str, drop: str) -> pipeline.ForecastPipeline:
+    # retrain_every=1: every batch refits on the full history, so a fresh
+    # pipeline object after a restart forecasts like the first one
+    pipe = pipeline.ForecastPipeline(
+        spark, work, lookback=3, horizon=2, retrain_every=1, min_train_rows=10
+    )
+    pipe.start(file_tick_stream(spark, drop)).awaitTermination(300)
+    return pipe
+
+
+def test_pipeline_restart_keeps_recorded_partition_count(spark, tmp_path, monkeypatch):
+    """A pipeline checkpoint first started under another shuffle partition
+    count (7, with the start helper bypassed) keeps that count when the
+    stream restarts through the helper, and its stores equal an
+    uninterrupted run's over the same poll files."""
+    # integer prices, two keys: every Gram sum is exact, so the two runs'
+    # forecasts can be compared bit for bit
+    polls = [
+        [(b * 20 + i, (b * 20 + i) * 60, 1 + i % 2, float(100 + b * 20 + i + i % 3)) for i in range(20)]
+        for b in range(4)
+    ]
+    drop, work = str(tmp_path / "drop"), str(tmp_path / "work")
+    for b in (0, 1):
+        _write_poll_file(drop, f"poll_{b:03d}.json", polls[b])
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    monkeypatch.setattr(pipeline, "start_stream", lambda writer: writer.start())
+    spark.conf.set(key, "7")
+    try:
+        _run_pipeline(spark, work, drop)
+    finally:
+        spark.conf.set(key, old)
+        monkeypatch.undo()
+    assert state_partitions(spark, f"{work}/ckpt") == 7
+
+    for b in (2, 3):
+        _write_poll_file(drop, f"poll_{b:03d}.json", polls[b])
+    restarted = _run_pipeline(spark, work, drop)
+    assert spark.conf.get(key) == old
+    assert state_partitions(spark, f"{work}/ckpt") == 7
+
+    drop_u, work_u = str(tmp_path / "drop_u"), str(tmp_path / "work_u")
+    for b in range(4):
+        _write_poll_file(drop_u, f"poll_{b:03d}.json", polls[b])
+    uninterrupted = _run_pipeline(spark, work_u, drop_u)
+    cores = spark.sparkContext.defaultParallelism
+    assert state_partitions(spark, f"{work_u}/ckpt") == cores
+
+    rows = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
+    ticks, ledger = rows(restarted.ticks()), rows(restarted.ledger())
+    assert len(ticks) == 80 and ticks == rows(uninterrupted.ticks())
+    assert ledger and ledger == rows(uninterrupted.ledger())
 
 
 def test_holt_winters_state_survives_restart(spark, tmp_path):
